@@ -19,6 +19,7 @@ from __future__ import annotations
 import errno
 import os
 import shutil
+import tempfile
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
@@ -78,10 +79,11 @@ class Importer:
     def run(self) -> ImportResult:
         from .readers.router import route
 
-        workdir = None
+        # the import owns its scratch dir (downloads, extracted archives)
+        # from before routing until every path out of run()
+        workdir = tempfile.mkdtemp(prefix="cartodb_import_")
         try:
-            df, meta = route(self.spark, self.source)
-            workdir = meta.get("workdir")
+            df, meta = route(self.spark, self.source, workdir)
             # archive explosion may retarget the name (importer.rb:106),
             # unless the user forced one
             if meta.get("suggested_name") and not self.force_name:
@@ -97,14 +99,19 @@ class Importer:
             # O10 name sanitation (readers already sanitize; idempotent)
             df = df.toDF(*naming.sanitize_columns(df.columns))
             # O11 GeoJSON the_geom rebuild — only when the column holds
-            # GeoJSON text (probe one non-null cell driver-side)
+            # GeoJSON text. A driver-side reader reports that from the
+            # column it holds; for a distributed reader one non-null cell
+            # is probed (one Spark job).
             if "the_geom" in df.columns:
-                probe = (
-                    df.select("the_geom")
-                    .filter("the_geom IS NOT NULL")
-                    .first()
-                )
-                if probe and str(probe[0]).lstrip().startswith("{"):
+                geojson = meta.get("the_geom_geojson")
+                if geojson is None:
+                    probe = (
+                        df.select("the_geom")
+                        .filter("the_geom IS NOT NULL")
+                        .first()
+                    )
+                    geojson = bool(probe) and str(probe[0]).lstrip().startswith("{")
+                if geojson:
                     df = rebuild_the_geom(df)
                     self.log("rebuilt the_geom from GeoJSON")
             # O12/O13 lat-lon georeferencing
@@ -185,8 +192,7 @@ class Importer:
             )
         finally:
             # O20 ensure: unlink temp files (importer.rb:469-475)
-            if workdir and os.path.isdir(workdir):
-                shutil.rmtree(workdir, ignore_errors=True)
+            shutil.rmtree(workdir, ignore_errors=True)
 
 
 class Exporter:

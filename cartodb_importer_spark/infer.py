@@ -5,7 +5,14 @@ with per-cell regexes and a monotone promotion lattice
 ``integer < float < varchar`` (blanks skipped, int32 overflow promotes
 integer -> float). Its row-at-a-time loop becomes ONE Spark aggregate job
 here: the lattice is an ordinal max, so inference over 100 TB is a single
-map-side-combined pass.
+map-side-combined pass. A spreadsheet is decoded on the driver, so its
+columns are typed where they already are: the same lattice and casts run
+on its ``pyarrow.Table`` with ``pyarrow.compute``, and no Spark job runs.
+
+Cells the lattice admits but Spark's cast cannot parse (``1|5`` matches
+FLOAT_RX; a trailing U+0085 passes Java's ``$``) become NULL: the casts
+are ``try_cast``, so one such cell no longer fails the import under
+Spark's default ANSI mode.
 
 Divergence note (documented, deliberate): the reference only ever promotes
 from ``integer`` — a column whose FIRST non-blank cell parses as float stays
@@ -22,6 +29,8 @@ from __future__ import annotations
 import codecs
 import re
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as st
@@ -34,51 +43,106 @@ INT32_MAX = 2147483647  # importer.rb:544
 
 _ORD_TO_TYPE = {0: "integer", 1: "float", 2: "varchar"}
 
+# The Java-regex semantics Spark's rlike gives INT_RX, FLOAT_RX and \S,
+# restated for RE2 (pyarrow.compute): Java's \s is [ \t\n\x0B\f\r] only,
+# and Java's `$` also matches just before one final line terminator.
+_JAVA_EOL = r"(?:\r\n|[\n\r\x{85}\x{2028}\x{2029}])?$"
+_NONBLANK_RE2 = r"[^ \t\n\x0b\f\r]"
+_INT_RE2 = INT_RX[:-1] + _JAVA_EOL
+_FLOAT_RE2 = FLOAT_RX[:-1] + _JAVA_EOL
+# What Spark's string->number cast parses among the cells the lattice
+# admits: the number, once the cast's trim drops an ASCII line terminator.
+_CASTABLE_RE2 = r"^(?P<n>-?[0-9]+(?:\.[0-9]+)?)(?:\r\n|[\n\r])?$"
 
-def infer_column_types(df: DataFrame, columns: list[str] | None = None) -> dict[str, str]:
-    """Distributed §2.2 inference: one aggregate computing, per column,
-    ``max(ordinal(cell))`` with blanks contributing nothing.
+
+def infer_column_types(
+    data: DataFrame | pa.Table, columns: list[str] | None = None
+) -> dict[str, str]:
+    """§2.2 inference: per column, ``max(ordinal(cell))`` with blanks
+    contributing nothing. A DataFrame is typed by one distributed
+    aggregate; a ``pyarrow.Table`` on the driver, with no Spark job.
 
     Returns {column: 'integer'|'float'|'varchar'} — columns that never held
     a non-blank value default to 'varchar' (importer.rb:557).
     """
-    columns = columns or df.columns
-    aggs = []
-    for c in columns:
-        cell = F.col(c)
-        ordinal = (
-            F.when(cell.isNull() | ~cell.rlike(r"\S"), F.lit(None))
-            .when(
-                cell.rlike(INT_RX),
-                F.when(cell.cast("double") > INT32_MAX, 1).otherwise(0),
+    if isinstance(data, pa.Table):
+        columns = columns or data.column_names
+        ordinals = {c: _arrow_ordinal(data[c]) for c in columns}
+    else:
+        columns = columns or data.columns
+        aggs = []
+        for c in columns:
+            cell = F.col(c)
+            ordinal = (
+                F.when(cell.isNull() | ~cell.rlike(r"\S"), F.lit(None))
+                .when(
+                    cell.rlike(INT_RX),
+                    F.when(cell.try_cast("double") > INT32_MAX, 1).otherwise(0),
+                )
+                .when(cell.rlike(FLOAT_RX), F.lit(1))
+                .otherwise(F.lit(2))
             )
-            .when(cell.rlike(FLOAT_RX), F.lit(1))
-            .otherwise(F.lit(2))
-        )
-        aggs.append(F.max(ordinal).alias(c))
-    row = df.agg(*aggs).first()
+            aggs.append(F.max(ordinal).alias(c))
+        row = data.agg(*aggs).first()
+        ordinals = {c: row[c] for c in columns}
     return {
-        c: _ORD_TO_TYPE[row[c]] if row[c] is not None else "varchar"
-        for c in columns
+        c: _ORD_TO_TYPE[o] if o is not None else "varchar"
+        for c, o in ordinals.items()
     }
 
 
-def apply_inferred_types(df: DataFrame, types: dict[str, str]) -> DataFrame:
+def _arrow_number(col: pa.ChunkedArray, to: pa.DataType) -> pa.ChunkedArray:
+    """Spark's try_cast of a lattice-admitted cell to a number."""
+    m = pc.extract_regex(col, _CASTABLE_RE2)
+    return pc.cast(pc.struct_field(m, [0]), to)
+
+
+def _arrow_ordinal(col: pa.ChunkedArray) -> int | None:
+    nonblank = pc.fill_null(pc.match_substring_regex(col, _NONBLANK_RE2), False)
+    is_int = pc.match_substring_regex(col, _INT_RE2)
+    is_float = pc.match_substring_regex(col, _FLOAT_RE2)
+    if not pc.any(nonblank).as_py():
+        return None
+    if pc.any(pc.and_(nonblank, pc.invert(pc.or_(is_int, is_float)))).as_py():
+        return 2
+    # a cell the cast nulls is not "big": Spark's when(null) falls through
+    big = pc.fill_null(pc.greater(_arrow_number(col, pa.float64()), INT32_MAX), False)
+    if pc.any(pc.and_(nonblank, pc.or_(is_float, pc.and_(is_int, big)))).as_py():
+        return 1
+    return 0
+
+
+def apply_inferred_types(
+    data: DataFrame | pa.Table, types: dict[str, str]
+) -> DataFrame | pa.Table:
     """Cast string columns per the inferred lattice. Floats accept ',' as
     the decimal separator (importer.rb:528: the regex admits it), so a
     comma-decimal cell is normalized before the cast."""
-    out = []
-    for c in df.columns:
+    if isinstance(data, pa.Table):
+        out = {}
+        for c in data.column_names:
+            t = types.get(c)
+            if t == "integer":
+                out[c] = _arrow_number(data[c], pa.int32())
+            elif t == "float":
+                out[c] = _arrow_number(
+                    pc.replace_substring(data[c], ",", "."), pa.float64()
+                )
+            else:
+                out[c] = data[c]
+        return pa.table(out)
+    cols = []
+    for c in data.columns:
         t = types.get(c)
         if t == "integer":
-            out.append(F.col(c).cast("int").alias(c))
+            cols.append(F.col(c).try_cast("int").alias(c))
         elif t == "float":
-            out.append(
-                F.regexp_replace(F.col(c), ",", ".").cast("double").alias(c)
+            cols.append(
+                F.regexp_replace(F.col(c), ",", ".").try_cast("double").alias(c)
             )
         else:
-            out.append(F.col(c))
-    return df.select(*out)
+            cols.append(F.col(c))
+    return data.select(*cols)
 
 
 def spark_schema_for(types: dict[str, str]) -> st.StructType:

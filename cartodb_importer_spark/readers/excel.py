@@ -1,17 +1,21 @@
 """Spreadsheet reader (O5, importer.rb:124-140): XLS(X)/ODS -> table.
 
-The reference converts to CSV via the roo gem, then runs the CSV path; the
-Spark-native equivalent extracts the first sheet driver-side (openpyxl when
-importable) into a stringified DataFrame and runs the SAME §2.2 inference,
-so type behavior matches the CSV path exactly.
+The reference converts to CSV via the roo gem, then runs the CSV path. Here
+the first sheet is extracted on the driver (openpyxl when importable) into
+string columns of a ``pyarrow.Table``, and the SAME §2.2 lattice and casts
+the CSV path runs as a Spark aggregate run on that table instead
+(``infer_column_types`` accepts either), so type behavior matches the CSV
+path exactly and the publish write is the import's only Spark job.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import naming
 from ..infer import apply_inferred_types, infer_column_types
+from .frame import geojson_geom, to_spark
 
 
 def _load_rows(path: str) -> tuple[list[str], list[list[str | None]]]:
@@ -161,10 +165,14 @@ def _read_ods_stdlib(path: str) -> list[list[str]]:
 def read_excel(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
     header, data = _load_rows(path)
     names = naming.sanitize_columns([h or "" for h in header])
-    df = spark.createDataFrame(
-        [[cell if cell != "" else None for cell in row] for row in data],
-        schema=", ".join(f"`{n}` string" for n in names),
-    )
-    types = infer_column_types(df)
-    df = apply_inferred_types(df, types)
-    return df, {"import_type": path[path.rfind(".") :], "inferred_types": types}
+    table = pa.table({
+        n: pa.array([None if row[i] == "" else row[i] for row in data], pa.string())
+        for i, n in enumerate(names)
+    })
+    types = infer_column_types(table)
+    table = apply_inferred_types(table, types)
+    return to_spark(spark, table), {
+        "import_type": path[path.rfind(".") :],
+        "inferred_types": types,
+        "the_geom_geojson": geojson_geom(table),
+    }

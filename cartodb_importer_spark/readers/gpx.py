@@ -8,7 +8,10 @@ from __future__ import annotations
 
 import xml.etree.ElementTree as ET
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+
+from .frame import to_spark
 
 _NS = "{http://www.topografix.com/GPX/1/1}"
 _NS0 = "{http://www.topografix.com/GPX/1/0}"
@@ -32,6 +35,7 @@ def read_gpx(
     'tracks', 'routes', 'waypoints'."""
     root = ET.parse(path).getroot()
     rows: list[tuple] = []
+    int_cols = ["ogc_fid"]
 
     if layer == "track_points":
         fid = 0
@@ -51,10 +55,8 @@ def read_gpx(
                         )
                     )
                     fid += 1
-        schema = (
-            "ogc_fid int, track_fid int, track_seg_id int,"
-            " ele string, time string, the_geom string"
-        )
+        names = ["ogc_fid", "track_fid", "track_seg_id", "ele", "time", "the_geom"]
+        int_cols = names[:3]
     elif layer == "waypoints":
         for i, wpt in enumerate(_findall(root, "wpt")):
             lon, lat = float(wpt.get("lon")), float(wpt.get("lat"))
@@ -66,7 +68,7 @@ def read_gpx(
                     f"POINT({lon!r} {lat!r})",
                 )
             )
-        schema = "ogc_fid int, name string, time string, the_geom string"
+        names = ["ogc_fid", "name", "time", "the_geom"]
     elif layer in ("tracks", "routes"):
         tag = "trk" if layer == "tracks" else "rte"
         pt_tag = "trkpt" if layer == "tracks" else "rtept"
@@ -83,9 +85,15 @@ def read_gpx(
             rows.append(
                 (i, _findtext(trk, "name"), f"LINESTRING({coords})" if pts else None)
             )
-        schema = "ogc_fid int, name string, the_geom string"
+        names = ["ogc_fid", "name", "the_geom"]
     else:
         raise ValueError(f"unknown GPX layer {layer!r}")
 
-    df = spark.createDataFrame(rows, schema)
-    return df, {"import_type": ".gpx", "layer": layer, "rows": len(rows)}
+    columns = {n: [r[i] for r in rows] for i, n in enumerate(names)}
+    df = to_spark(spark, columns, dict.fromkeys(int_cols, pa.int32()))
+    return df, {
+        "import_type": ".gpx",
+        "layer": layer,
+        "rows": len(rows),
+        "the_geom_geojson": False,  # built as WKT above
+    }

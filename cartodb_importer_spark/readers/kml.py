@@ -10,6 +10,7 @@ import xml.etree.ElementTree as ET
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import naming
+from .frame import geojson_geom, to_spark
 
 _NS = "{http://www.opengis.net/kml/2.2}"
 _NS_OLD = "{http://earth.google.com/kml/2.2}"
@@ -98,11 +99,9 @@ def read_kml(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
     placemarks = root.iter(f"{_NS}Placemark")
     pms = list(placemarks) or list(root.iter(f"{_NS_OLD}Placemark"))
 
-    # collect attribute schema: name/description + ExtendedData SimpleData
-    attr_names: list[str] = ["name", "description"]
-    rows = []
-    extras_seen: list[str] = []
-    parsed = []
+    # attribute schema: name/description + ExtendedData SimpleData/Data
+    names, descs, geoms, extras_by_pm = [], [], [], []
+    extras_seen: dict[str, None] = {}
     for pm in pms:
         name_el = _find(pm, "name")
         desc_el = _find(pm, "description")
@@ -117,23 +116,20 @@ def read_kml(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
                     extras[data.get("name", "")] = (
                         v.text if v is not None else ""
                     )
-        for k in extras:
-            if k not in extras_seen:
-                extras_seen.append(k)
-        parsed.append(
-            (
-                name_el.text if name_el is not None else None,
-                desc_el.text if desc_el is not None else None,
-                extras,
-                _geom_wkt(pm),
-            )
-        )
-    all_names = attr_names + extras_seen
-    for nm, desc, extras, wkt in parsed:
-        rows.append(
-            tuple([nm, desc] + [extras.get(k) for k in extras_seen] + [wkt])
-        )
-    clean = naming.sanitize_columns(all_names) + ["the_geom"]
-    schema = ", ".join(f"`{c}` string" for c in clean)
-    df = spark.createDataFrame(rows, schema)
-    return df, {"import_type": ".kml", "rows": len(rows)}
+        extras_seen.update(dict.fromkeys(extras))
+        names.append(name_el.text if name_el is not None else None)
+        descs.append(desc_el.text if desc_el is not None else None)
+        extras_by_pm.append(extras)
+        geoms.append(_geom_wkt(pm))
+    values = [names, descs]
+    values += [[e.get(k) for e in extras_by_pm] for k in extras_seen]
+    values.append(geoms)
+    clean = naming.sanitize_columns(
+        ["name", "description", *extras_seen, "the_geom"]
+    )
+    columns = dict(zip(clean, values))
+    return to_spark(spark, columns), {
+        "import_type": ".kml",
+        "rows": len(pms),
+        "the_geom_geojson": geojson_geom(columns),
+    }

@@ -17,14 +17,22 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+
+from .frame import to_spark
 
 TILE = 180  # importer.rb:426-427
 
-RASTER_SCHEMA = (
-    "rid int, tile_x int, tile_y int, width int, height int, srid int,"
-    " block binary"
-)
+_TILE_COLUMNS = ("rid", "tile_x", "tile_y", "width", "height", "srid", "block")
+_TILE_TYPES = {**dict.fromkeys(_TILE_COLUMNS[:-1], pa.int32()), "block": pa.binary()}
+
+
+def _tiles(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """One row per tile block: rid, tile_x, tile_y, width, height, srid
+    (int) and block (binary)."""
+    columns = {c: [r[i] for r in rows] for i, c in enumerate(_TILE_COLUMNS)}
+    return to_spark(spark, columns, _TILE_TYPES)
 
 
 def read_raster(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
@@ -63,7 +71,7 @@ def _read_pytiff(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
                 (rid, tx // TILE, ty // TILE, w, h, srid, block.tobytes())
             )
             rid += 1
-    df = spark.createDataFrame(rows, RASTER_SCHEMA)
+    df = _tiles(spark, rows)
     return df, {
         "import_type": ".tif",
         "decoder": "pytiff",
@@ -91,7 +99,7 @@ def _read_rasterio(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
                 block = src.read(1, window=Window(tx, ty, w, h)).tobytes()
                 rows.append((rid, tx // TILE, ty // TILE, w, h, srid, block))
                 rid += 1
-    df = spark.createDataFrame(rows, RASTER_SCHEMA)
+    df = _tiles(spark, rows)
     return df, {"import_type": ".tif", "decoder": "rasterio", "rows": len(rows)}
 
 
@@ -106,7 +114,7 @@ def _read_stub(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
     for rid in range(n):
         block = raw[rid * blocksize : (rid + 1) * blocksize]
         rows.append((rid, rid % side, rid // side, TILE, TILE, 4326, block))
-    df = spark.createDataFrame(rows, RASTER_SCHEMA)
+    df = _tiles(spark, rows)
     return df, {
         "import_type": ".tif",
         "decoder": "stub",

@@ -11,7 +11,6 @@
 from __future__ import annotations
 
 import os
-import tempfile
 import urllib.parse
 import urllib.request
 import zipfile
@@ -104,14 +103,15 @@ def explode_tar(path: str, workdir: str) -> tuple[str, str | None]:
 
 
 def route(
-    spark: SparkSession, path: str, workdir: str | None = None
+    spark: SparkSession, path: str, workdir: str
 ) -> tuple[DataFrame, dict]:
     """O3 dispatch: returns (DataFrame, meta). meta['suggested_name'] is set
     when archive explosion retargets the table name.
 
-    No automatic cleanup here — spark.read.csv is lazy, so extracted/staged
-    files must outlive the read until the caller's terminal action (the
-    Importer deletes meta['workdir'] after the sink write, O20's `ensure`).
+    Downloads and extracted archives land in ``workdir``, which the caller
+    owns: spark.read.csv is lazy, so those files must outlive the read
+    until the caller's terminal action (the Importer removes the workdir
+    after the sink write, or after any failure — O20's `ensure`).
     """
     from .csv import read_csv
     from .excel import read_excel
@@ -120,8 +120,7 @@ def route(
     from .kml import read_kml
     from .shp import read_shp
 
-    workdir = workdir or tempfile.mkdtemp(prefix="cartodb_import_")
-    meta_extra: dict = {"workdir": workdir}
+    meta_extra: dict = {}
     path = stage_source(path, workdir)
     ext = os.path.splitext(path)[1].lower()
     # Unwrap containers until the extension is a terminal format: an

@@ -18,9 +18,11 @@ from __future__ import annotations
 import os
 import struct
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from .dbf import read_dbf
+from .frame import geojson_geom, to_spark
 
 SHAPE_POINT = 1
 SHAPE_POLYLINE = 3
@@ -242,45 +244,27 @@ def read_shp(spark: SparkSession, shp_path: str) -> tuple[DataFrame, dict]:
 
     from decimal import Decimal
 
-    clean = naming.sanitize_columns(names)
-    data = []
-    for i, shape in enumerate(shapes):
-        attrs = rows[i] if i < len(rows) else [None] * len(names)
-        attrs = [
-            float(a)
-            if isinstance(a, Decimal)
-            else (str(a) if a is not None and not isinstance(a, (int, float)) else a)
-            for a in attrs
-        ]
-        data.append([i + 1] + attrs + [shape])
-    from pyspark.sql import types as st
-
-    fields = [st.StructField("gid", st.IntegerType())]
-    for i, c in enumerate(clean):
+    clean = naming.sanitize_columns(["gid", *names, "the_geom"])
+    columns: dict[str, list] = {"gid": list(range(1, len(shapes) + 1))}
+    types: dict[str, pa.DataType] = {"gid": pa.int32()}
+    for i, c in enumerate(clean[1:-1]):
+        # one value per shape; a .dbf with fewer records pads with nulls
+        values = [rows[j][i] if j < len(rows) else None for j in range(len(shapes))]
         sample = next((r[i] for r in rows if r[i] is not None), None)
         if isinstance(sample, Decimal):
-            t: st.DataType = st.DoubleType()  # DBF N with deci (dbfUtils.py:47)
-        elif isinstance(sample, bool):
-            t = st.StringType()
+            t, cast = pa.float64(), float  # DBF N with deci (dbfUtils.py:47)
+        elif isinstance(sample, bool) or not isinstance(sample, (int, float)):
+            t, cast = pa.string(), str
         elif isinstance(sample, int):
-            t = st.LongType()
-        elif isinstance(sample, float):
-            t = st.DoubleType()
+            t, cast = pa.int64(), int
         else:
-            t = st.StringType()
-        fields.append(st.StructField(c, t))
-    fields.append(st.StructField("the_geom", st.StringType()))
-    # normalize attr cell types to declared schema
-    for row in data:
-        for j, fld in enumerate(fields[1:-1], start=1):
-            v = row[j]
-            if v is None:
-                continue
-            if isinstance(fld.dataType, st.LongType):
-                row[j] = int(v)
-            elif isinstance(fld.dataType, st.DoubleType):
-                row[j] = float(v)
-            else:
-                row[j] = str(v)
-    df = spark.createDataFrame(data, st.StructType(fields))
-    return df, {"srid": srid, "rows": len(data), "import_type": ".shp"}
+            t, cast = pa.float64(), float
+        columns[c] = [None if v is None else cast(v) for v in values]
+        types[c] = t
+    columns[clean[-1]] = shapes
+    return to_spark(spark, columns, types), {
+        "srid": srid,
+        "rows": len(shapes),
+        "import_type": ".shp",
+        "the_geom_geojson": geojson_geom(columns),
+    }

@@ -2,7 +2,7 @@
 
 Defaults are chosen for correctness-vs-DuckDB and for scale-out behavior:
 AQE on (runtime partition coalescing + skew-join splitting), Arrow on (fast
-pandas_udf transfer), UTC session timezone (timestamp hashes must match the
+pandas transfer), UTC session timezone (timestamp hashes must match the
 oracle), shuffle partitions sized to the local core count (on a real cluster
 this is overridden to ~2-3x total cores; AQE coalesces down after the fact).
 """
@@ -60,7 +60,10 @@ def get_spark(
         # slots instead of competing head-on (r12: 8:1 takes the oob
         # rehearsal's trigger overhead from +11% to ~2%).
         .config("spark.scheduler.mode", "FAIR")
-        # --- python<->jvm transfer is Arrow-batched, never per-row ---
+        # --- Arrow for pandas <-> JVM transfer (toPandas, pandas input to
+        # createDataFrame, pandas UDFs). It does not apply to a list of
+        # rows, which createDataFrame pickles row by row; driver-side
+        # readers hand over a pyarrow.Table instead (readers/frame.py). ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # --- deterministic timestamp semantics vs the DuckDB oracle ---
         .config("spark.sql.session.timeZone", "UTC")

@@ -16,7 +16,9 @@ import shutil
 import tempfile
 import zipfile
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, Row
+from pyspark.sql import types as st
 
 #: Max rows the driver-side export paths (KMZ/SHP zip assembly) will
 #: collect. Export-to-download is a bounded workflow by contract; this
@@ -24,19 +26,55 @@ from pyspark.sql import DataFrame
 EXPORT_ROW_CAP = 1_000_000
 
 
-def _guard_export_size(df: DataFrame, cap: int | None = None) -> None:
-    """Raise if df exceeds the driver-side export cap. Uses a limit(cap+1)
-    probe, not count(): the probe stops scanning after cap+1 rows, so it
-    stays cheap even when the input is huge."""
-    if cap is None:
-        cap = EXPORT_ROW_CAP
-    probe = df.limit(cap + 1).count()
-    if probe > cap:
+def _fetch_capped(df: DataFrame) -> pa.Table:
+    """The rows of df as one Arrow table, in partition order, or a
+    ValueError past the driver-side export cap. One Spark job both
+    enforces the cap and fetches: ``limit(cap + 1)`` stops the scan after
+    cap + 1 rows. ``coalesce(1)`` keeps that a single job (a limit over
+    several partitions adds a shuffle stage, which runs as a job of its
+    own) and keeps the order ``collect()`` gives."""
+    cap = EXPORT_ROW_CAP
+    table = df.coalesce(1).limit(cap + 1).toArrow()
+    if table.num_rows > cap:
         raise ValueError(
             f"export exceeds the driver-side row cap ({cap}); use the "
             "partitioned directory sinks (write_csv_dir/write_parquet_dir) "
             "for large tables"
         )
+    return table
+
+
+def _row_values(dtype: st.DataType):
+    """Converter from a ``to_pylist`` value of an Arrow column to the
+    value ``collect()`` gives in a Row, for the types where they differ;
+    None where they agree."""
+    if isinstance(dtype, st.StructType):
+        fields = [(f.name, _row_values(f.dataType)) for f in dtype.fields]
+        make = Row(*dtype.names)
+        return lambda v: None if v is None else make(*(
+            conv(v[n]) if conv else v[n] for n, conv in fields
+        ))
+    if isinstance(dtype, st.ArrayType):
+        conv = _row_values(dtype.elementType)
+        return conv and (lambda v: None if v is None else [conv(x) for x in v])
+    if isinstance(dtype, st.MapType):
+        kc, vc = _row_values(dtype.keyType), _row_values(dtype.valueType)
+        return lambda v: None if v is None else {
+            (kc(k) if kc else k): (vc(x) if vc else x) for k, x in v
+        }
+    if isinstance(dtype, st.TimestampType):
+        return lambda v: None if v is None else v.astimezone().replace(tzinfo=None)
+    return None
+
+
+def _texts(column: pa.ChunkedArray, dtype: st.DataType) -> list[str]:
+    """A fetched column rendered as the exporters write a cell: str() of
+    the value a Row holds, '' for null."""
+    values = column.to_pylist()
+    conv = _row_values(dtype)
+    if conv:
+        values = map(conv, values)
+    return ["" if v is None else str(v) for v in values]
 
 
 def write_csv_dir(df: DataFrame, path: str, header: bool = True) -> None:
@@ -121,23 +159,26 @@ def export_kmz(
     """O29: KMZ whose single entry is always doc.kml (exporter.rb:82).
     Placemark per row; non-geometry columns become ExtendedData."""
     os.makedirs(out_dir, exist_ok=True)
-    _guard_export_size(df)
-    attr_cols = [c for c in df.columns if c != geom_col]
-    rows = df.collect()  # export-to-download path: bounded by the guard
-    placemarks = []
-    for r in rows:
-        data = "".join(
-            f'<Data name="{c}"><value>{"" if r[c] is None else str(r[c])}</value></Data>'
-            for c in attr_cols
-        )
-        geom = _wkt_to_kml(r[geom_col]) if geom_col in df.columns else ""
-        placemarks.append(
-            f"<Placemark><ExtendedData>{data}</ExtendedData>{geom}</Placemark>"
-        )
+    table = _fetch_capped(df)  # export-to-download path: bounded by the cap
+    attrs = [
+        [f'<Data name="{f.name}"><value>{v}</value></Data>'
+         for v in _texts(table.column(f.name), f.dataType)]
+        for f in df.schema.fields
+        if f.name != geom_col
+    ]
+    data = map("".join, zip(*attrs)) if attrs else [""] * table.num_rows
+    geoms = (
+        map(_wkt_to_kml, table.column(geom_col).to_pylist())
+        if geom_col in df.columns
+        else [""] * table.num_rows
+    )
     kml = (
         '<?xml version="1.0" encoding="UTF-8"?>'
         '<kml xmlns="http://www.opengis.net/kml/2.2"><Document>'
-        + "".join(placemarks)
+        + "".join(
+            f"<Placemark><ExtendedData>{d}</ExtendedData>{g}</Placemark>"
+            for d, g in zip(data, geoms)
+        )
         + "</Document></kml>"
     )
     kmz_path = os.path.join(out_dir, f"{name}.kmz")
@@ -226,14 +267,13 @@ def export_shp_zip(
     from ..readers.dbf import write_dbf
 
     os.makedirs(out_dir, exist_ok=True)
-    _guard_export_size(df)
+    table = _fetch_capped(df)
     attr_cols = [c for c in df.columns if c != geom_col]
-    rows = df.collect()
-
-    geoms = [
-        _parse_wkt_parts(r[geom_col] if geom_col in df.columns else None)
-        for r in rows
-    ]
+    geoms = (
+        [_parse_wkt_parts(w) for w in table.column(geom_col).to_pylist()]
+        if geom_col in df.columns
+        else [None] * table.num_rows
+    )
     file_kind = next((g[0] for g in geoms if g), "point")
 
     with tempfile.TemporaryDirectory() as tmp:
@@ -274,9 +314,15 @@ def export_shp_zip(
         # --- .dbf (all attributes as C(254) strings, reference-style
         # lowest-common-denominator export)
         specs = [("C", 254, 0)] * len(attr_cols)
-        records = [
-            ["" if r[c] is None else str(r[c]) for c in attr_cols] for r in rows
-        ]
+        records = (
+            list(zip(*(
+                _texts(table.column(f.name), f.dataType)
+                for f in df.schema.fields
+                if f.name != geom_col
+            )))
+            if attr_cols
+            else [()] * table.num_rows
+        )
         with open(base + ".dbf", "wb") as f:
             write_dbf(f, attr_cols, specs, records)
         # --- .prj (EPSG:4326)

@@ -79,6 +79,27 @@ def test_export_bytes_match_golden(exported, member):
     assert got == want
 
 
+def test_fetched_values_render_like_collected_rows(spark, tmp_path):
+    """Types whose Arrow values differ from a Row's (struct, map, binary,
+    timestamp, nested) still render as str() of the Row value, for a table
+    read back from parquet as the exporters receive it."""
+    from cartodb_importer_spark.sinks.files import _fetch_capped, _texts
+
+    spark.sql(
+        "SELECT named_struct('a', 1, 'b', 'x') AS s,"
+        " array(named_struct('c', 1.5D), NULL) AS arr, map('k', 1) AS m,"
+        " X'0102' AS bin, TIMESTAMP'2020-01-02 03:04:05' AS ts,"
+        " DATE'2020-01-02' AS d, CAST(1.50 AS DECIMAL(5,2)) AS dec,"
+        " CAST(NULL AS STRING) AS n, true AS flag, 2.5F AS f, 7L AS l"
+    ).write.parquet(str(tmp_path / "t"))
+    df = spark.read.parquet(str(tmp_path / "t"))
+    table = _fetch_capped(df)
+    rows = df.collect()
+    for field in df.schema.fields:
+        want = ["" if r[field.name] is None else str(r[field.name]) for r in rows]
+        assert _texts(table.column(field.name), field.dataType) == want, field
+
+
 if __name__ == "__main__":
     import tempfile
 

@@ -91,6 +91,23 @@ def test_zip_import_selects_supported_entry(spark, catalog, tmp_path):
     assert res.rows_imported == 4
 
 
+def test_routing_error_leaves_no_workdir(spark, catalog, tmp_path, monkeypatch):
+    """The import owns its workdir: an archive that fails routing (no
+    supported entry) raises, and its extracted files do not outlive it."""
+    import tempfile
+
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    zpath = tmp_path / "nothing.zip"
+    with zipfile.ZipFile(zpath, "w") as zf:
+        zf.writestr("readme.txt", "no table here")
+    with pytest.raises(ValueError, match="no supported entry"):
+        Importer(spark, catalog, str(zpath)).run()
+    assert os.listdir(scratch) == []
+    assert catalog.table_names() == []
+
+
 def test_geojson_import(spark, catalog, tmp_path):
     # spec/import_spec.rb:236 (simple.json)
     geojson = """{"type":"FeatureCollection","features":[
@@ -339,7 +356,7 @@ def test_route_jsonl_distributed(spark, tmp_path):
         '{"User Name": "b", "N": 2}\n'
         '{"User Name": "c", "N": 3}\n'
     )
-    df, meta = route(spark, str(p))
+    df, meta = route(spark, str(p), str(tmp_path))
     assert meta["import_type"] == ".jsonl"
     assert sorted(df.columns) == ["n", "user_name"]
     assert df.count() == 3
@@ -353,7 +370,7 @@ def test_route_orc(spark, tmp_path):
     )
     p = str(tmp_path / "t.orc")
     src.write.orc(p)
-    df, meta = route(spark, p)
+    df, meta = route(spark, p, str(tmp_path))
     assert meta["import_type"] == ".orc"
     assert sorted(df.columns) == ["col_name", "id"]
     assert df.count() == 2
@@ -373,14 +390,14 @@ def test_route_tgz_and_gz_and_bom_csv(spark, tmp_path):
     tgz = tmp_path / "people.tgz"
     with tarfile.open(tgz, "w:gz") as tf:
         tf.add(csv, arcname="people.csv")
-    df, meta = route(spark, str(tgz))
+    df, meta = route(spark, str(tgz), str(tmp_path))
     assert df.count() == 2 and df.columns == ["name", "age"]
     assert meta["suggested_name"] == "people"
 
     gz = tmp_path / "solo.csv.gz"
     with open(csv, "rb") as s, gzip.open(gz, "wb") as d:
         d.write(s.read())
-    df2, _ = route(spark, str(gz))
+    df2, _ = route(spark, str(gz), str(tmp_path))
     assert df2.count() == 2 and df2.columns == ["name", "age"]
 
 
@@ -397,7 +414,7 @@ def test_route_gnu_dot_slash_tar(spark, tmp_path):
     with tarfile.open(tar, "w") as tf:
         tf.add(csv, arcname="./members.csv")
         tf.add(csv, arcname="./.hidden.csv")  # still skipped: dot basename
-    df, meta = route(spark, str(tar))
+    df, meta = route(spark, str(tar), str(tmp_path))
     assert df.count() == 2
     assert meta["suggested_name"] == "members"
 
@@ -417,7 +434,7 @@ def test_route_nested_gz_inside_tar(spark, tmp_path):
     tar = tmp_path / "nested.tar"
     with tarfile.open(tar, "w") as tf:
         tf.add(gz, arcname="inner.csv.gz")
-    df, meta = route(spark, str(tar))
+    df, meta = route(spark, str(tar), str(tmp_path))
     assert df.count() == 1 and df.columns == ["x", "y"]
     assert meta["suggested_name"] == "inner"
 
