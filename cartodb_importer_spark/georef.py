@@ -71,66 +71,37 @@ def geojson_point_to_wkt(geom: Column) -> Column:
     )
 
 
-def _ring_to_wkt(ring: Column) -> Column:
-    """array<array<double>> ring -> '(x y, x y, ...)'"""
-    return F.concat(
-        F.lit("("),
-        F.array_join(
-            F.transform(
-                ring,
-                lambda pt: F.concat(
-                    pt.getItem(0).cast("string"),
-                    F.lit(" "),
-                    pt.getItem(1).cast("string"),
-                ),
-            ),
-            ", ",
-        ),
-        F.lit(")"),
-    )
+# GeoJSON -> WKT as one SQL expression over a geometry column ``{g}``. One
+# parse on the JVM replaces the ~550 py4j calls composing it from Column
+# functions (a third of a second per file); the expression is the same.
+_RING_WKT = (
+    "concat('(', array_join(transform({ring}, p -> concat("
+    "cast(p[0] AS STRING), ' ', cast(p[1] AS STRING))), ', '), ')')"
+)
+_GEOJSON_TO_WKT = f"""CASE get_json_object({{g}}, '$.type')
+  WHEN 'Point' THEN CASE
+    WHEN get_json_object({{g}}, '$.coordinates[0]') IS NOT NULL
+     AND get_json_object({{g}}, '$.coordinates[1]') IS NOT NULL
+    THEN concat('POINT(', get_json_object({{g}}, '$.coordinates[0]'), ' ',
+                get_json_object({{g}}, '$.coordinates[1]'), ')') END
+  WHEN 'Polygon' THEN concat('POLYGON(', array_join(transform(
+    from_json(get_json_object({{g}}, '$.coordinates'),
+              'array<array<array<double>>>'),
+    r -> {_RING_WKT.format(ring="r")}), ', '), ')')
+  WHEN 'MultiPolygon' THEN concat('MULTIPOLYGON(', array_join(transform(
+    from_json(get_json_object({{g}}, '$.coordinates'),
+              'array<array<array<array<double>>>>'),
+    poly -> concat('(', array_join(transform(
+      poly, r -> {_RING_WKT.format(ring="r")}), ', '), ')')), ', '), ')')
+END"""
 
 
-def geojson_to_wkt(geom: Column) -> Column:
-    """General GeoJSON -> WKT for the types the reference exercises
-    (Point / MultiPolygon per spec fixtures, plus Polygon). Coordinates are
+def geojson_to_wkt(column: str) -> Column:
+    """General GeoJSON -> WKT of the named column, for the types the
+    reference exercises (Point / MultiPolygon per spec fixtures, plus
+    Polygon); other types and unparseable cells -> NULL. Coordinates are
     parsed with from_json into typed arrays; everything stays JVM-side."""
-    gtype = F.get_json_object(geom, "$.type")
-    # Point
-    point = geojson_point_to_wkt(geom)
-    # Polygon: coordinates array<ring>; ring = array<point>
-    poly_coords = F.from_json(
-        F.get_json_object(geom, "$.coordinates"), "array<array<array<double>>>"
-    )
-    polygon = F.concat(
-        F.lit("POLYGON("),
-        F.array_join(F.transform(poly_coords, _ring_to_wkt), ", "),
-        F.lit(")"),
-    )
-    # MultiPolygon: array<polygon>
-    mpoly_coords = F.from_json(
-        F.get_json_object(geom, "$.coordinates"),
-        "array<array<array<array<double>>>>",
-    )
-    mpolygon = F.concat(
-        F.lit("MULTIPOLYGON("),
-        F.array_join(
-            F.transform(
-                mpoly_coords,
-                lambda poly: F.concat(
-                    F.lit("("),
-                    F.array_join(F.transform(poly, _ring_to_wkt), ", "),
-                    F.lit(")"),
-                ),
-            ),
-            ", ",
-        ),
-        F.lit(")"),
-    )
-    return (
-        F.when(gtype == "Point", point)
-        .when(gtype == "Polygon", polygon)
-        .when(gtype == "MultiPolygon", mpolygon)
-    )
+    return F.expr(_GEOJSON_TO_WKT.format(g=f"`{column.replace('`', '``')}`"))
 
 
 def rebuild_the_geom(df: DataFrame) -> DataFrame:
@@ -139,4 +110,4 @@ def rebuild_the_geom(df: DataFrame) -> DataFrame:
     loop, drop — importer.rb:262-294)."""
     if "the_geom" not in df.columns:
         return df
-    return df.withColumn("the_geom", geojson_to_wkt(F.col("the_geom")))
+    return df.withColumn("the_geom", geojson_to_wkt("the_geom"))

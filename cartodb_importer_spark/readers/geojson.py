@@ -23,7 +23,6 @@ from decimal import Decimal
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .. import naming
 from ..georef import geojson_to_wkt
@@ -33,6 +32,12 @@ from .frame import geojson_geom, to_spark
 # ("decimal", precision, scale), ("array", element) and
 # ("struct", ((name, type), ...)) with fields in Java string order.
 _LONG = range(-(2**63), 2**63)
+
+
+def _struct(fields) -> tuple:
+    """Struct fields sorted by name as Java's String.compareTo orders them
+    (UTF-16 code units)."""
+    return ("struct", tuple(sorted(fields, key=lambda f: f[0].encode("utf-16-be"))))
 
 
 def _infer(v):
@@ -50,10 +55,7 @@ def _infer(v):
     if isinstance(v, str):
         return "string"
     if isinstance(v, dict):
-        return ("struct", tuple(sorted(
-            ((k, _infer(x)) for k, x in v.items()),
-            key=lambda f: f[0].encode("utf-16-be"),
-        )))
+        return _struct((k, _infer(x)) for k, x in v.items())
     t = "null"
     for x in v:
         t = _merge(t, _infer(x))
@@ -85,9 +87,7 @@ def _merge(a, b):
         fields = dict(a[1])
         for name, t in b[1]:
             fields[name] = _merge(fields[name], t) if name in fields else t
-        return ("struct", tuple(sorted(
-            fields.items(), key=lambda f: f[0].encode("utf-16-be")
-        )))
+        return _struct(fields.items())
     return "string"
 
 
@@ -247,7 +247,7 @@ def read_geojson(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
         for feat in features
     ]
     df = to_spark(spark, columns, types)
-    return df.withColumn(geom, geojson_to_wkt(F.col(geom))), {
+    return df.withColumn(geom, geojson_to_wkt(geom)), {
         "import_type": ".json",
         "rows": len(features),
         "the_geom_geojson": geojson,

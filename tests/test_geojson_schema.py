@@ -22,7 +22,9 @@ from cartodb_importer_spark import naming
 from cartodb_importer_spark.readers.geojson import read_geojson
 
 _FLOATS = [1.5, -0.25, 0.001, 1e-05, 1e7, 12345678.9, 1e22, -3.0, 0.1, 2.5e-08]
-_STRINGS = ["a", "", 'q"uote', "back\\slash", "tab\tnl\n", "ctl\x01\x1f", "ünï ☃", "{x}"]
+_STRINGS = [
+    "a", "", 'q"uote', "back\\slash", "tab\tnl\n", "ctl\x01\x1f", "ünï ☃", "{x}",
+]
 
 
 def _scalar(rng: random.Random):
@@ -97,9 +99,11 @@ def test_feature_properties_match_spark_read_json(spark, tmp_path, seed):
     props = _records(seed)
     features = [
         {"type": "Feature", "properties": p,
-         "geometry": {"type": "Point", "coordinates": [i + 0.25, 0.5]} if i % 3 else None}
+         "geometry": {"type": "Point", "coordinates": [i + 0.25, 0.5]}}
         for i, p in enumerate(props)
     ]
+    for f in features[::3]:
+        f["geometry"] = None
     path = tmp_path / "f.geojson"
     path.write_text(json.dumps({"type": "FeatureCollection", "features": features}))
     got, meta = read_geojson(spark, str(path))

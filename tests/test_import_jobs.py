@@ -46,7 +46,8 @@ def _kml(path):
 
 def _gpx(path):
     path.write_text(
-        '<?xml version="1.0"?><gpx xmlns="http://www.topografix.com/GPX/1/1" version="1.1">'
+        '<?xml version="1.0"?>'
+        '<gpx xmlns="http://www.topografix.com/GPX/1/1" version="1.1">'
         '<trk><trkseg><trkpt lat="41.0" lon="2.0"><ele>1</ele></trkpt>'
         '<trkpt lat="41.1" lon="2.1"/></trkseg></trk></gpx>'
     )
@@ -86,7 +87,8 @@ def test_driver_decoded_import_runs_one_job(spark, catalog, tmp_path, name):
         ".geojson": _geojson,
     }[path.suffix](path)
     results = []
-    assert _jobs(spark, lambda: results.append(Importer(spark, catalog, str(path)).run())) == 1
+    importer = Importer(spark, catalog, str(path))
+    assert _jobs(spark, lambda: results.append(importer.run())) == 1
     assert results[0].rows_imported >= 2
 
 

@@ -96,7 +96,8 @@ def _columns(seed: int = 7, n: int = 150) -> list[list[str | None]]:
             elif r < 0.85:
                 col.append(str(rng.randint(0, 2**33)))
             else:
-                col.append("".join(rng.choice(_ALPHABET) for _ in range(rng.randint(0, 5))))
+                k = rng.randint(0, 5)
+                col.append("".join(rng.choice(_ALPHABET) for _ in range(k)))
         cols.append(col)
     return cols
 
@@ -144,6 +145,5 @@ def test_unparseable_float_cell_imports_as_null(spark):
         "x"
     ).to_pylist() == [1.5, None, 2.25]
     df = spark.createDataFrame([(c,) for c in cells], "x string")
-    assert [r.x for r in apply_inferred_types(df, infer_column_types(df)).collect()] == [
-        1.5, None, 2.25,
-    ]
+    out = apply_inferred_types(df, infer_column_types(df)).collect()
+    assert [r.x for r in out] == [1.5, None, 2.25]
