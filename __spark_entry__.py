@@ -11,241 +11,15 @@ a thin adapter over that registry.
 
 from __future__ import annotations
 
-import glob
-import json
-import os
-import re
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from cartodb_importer_spark.caching import release_tracked_caches
 from cartodb_importer_spark.queries import ORACLES, QUERIES
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
-
-#: never-driver-verified families the r03 judge asked to see next (VERDICT
-#: r3 items 2/7): set ops, windows, streaming, UDF surface, graph, pipeline
-#: semantics. Names already green in any CORRECTNESS_r*.json are filtered
-#: out at call time, so stale pins can never waste a sweep slot.
-_PRIORITY = (
-    # r05 rotation: the 106 never-driver-verified names (VERDICT r4 item 1),
-    # llm family first (51), then agg (17), events (15), geo (13),
-    # reshape (7), scalar (2), pipeline (1). Already-green names are
-    # filtered at call time, so this list self-retires as rounds land.
-    "llm_span_dedup",
-    "llm_gopher_filter",
-    "llm_tfidf_top_terms",
-    "llm_bloom_decontaminate",
-    "llm_kmeans_fixed",
-    "llm_ivf_topk",
-    "llm_lsh_topk",
-    "llm_corpus_pipeline",
-    "llm_near_dedup",
-    "llm_dedup_clusters",
-    "llm_dedup_exact",
-    "llm_normalized_dedup",
-    "llm_minhash_signature",
-    "llm_minhash_pairs",
-    "llm_minhash_jaccard_est",
-    "llm_jaccard_pairs",
-    "llm_simhash",
-    "llm_simhash_hamming",
-    "llm_containment_pairs",
-    "llm_dup_ngram_fraction",
-    "llm_embedding_near_dup",
-    "llm_cosine_topk",
-    "llm_cosine_topk_per_label",
-    "llm_euclidean_topk",
-    "llm_knn_classify",
-    "llm_semantic_outliers",
-    "llm_label_centroids",
-    "llm_vector_norms",
-    "llm_embedding_standardize",
-    "llm_embedding_quantize",
-    "llm_text_stats",
-    "llm_lang_id",
-    "llm_quality_score",
-    "llm_fingerprint",
-    "llm_pattern_stats",
-    "llm_repetition_ratio",
-    "llm_pii_redact",
-    "llm_token_count",
-    "llm_top_bigrams",
-    "llm_bigram_lm_score",
-    "llm_chunk_documents",
-    "llm_sequence_packing",
-    "llm_inverted_index",
-    "llm_bm25_search",
-    "llm_rrf_fusion",
-    "llm_hash_sample",
-    "llm_train_test_split",
-    "llm_stratified_sample",
-    "llm_weighted_sample",
-    "llm_domain_mix_sample",
-    "agg_count_if",
-    "agg_bitwise",
-    "agg_incremental_rollup",
-    "agg_mad",
-    "agg_log_histogram",
-    "agg_winsorized_stats",
-    "agg_struct_json_collect",
-    "agg_decile_lift",
-    "agg_mom_growth",
-    "agg_abc_pareto",
-    "agg_share_of_parent",
-    "agg_chi2_independence",
-    "agg_salted_skew",
-    "agg_cms_frequency",
-    "agg_hll_sketch_merge",
-    "agg_kmv_distinct",
-    "agg_kmv_setops",
-    "events_anomaly_zscore",
-    "events_rate_limit",
-    "events_markov_transitions",
-    "events_ab_ttest",
-    "events_path_analysis",
-    "events_concurrency",
-    "events_funnel_latency",
-    "events_attribution",
-    "events_dau_wau",
-    "events_cusum_changepoint",
-    "events_funnel_windowed",
-    "events_seasonality_dow",
-    "events_decay_feature",
-    "events_user_entropy",
-    "events_linear_attribution",
-    "geo_point_accessors",
-    "geo_bbox_filter",
-    "geo_haversine",
-    "geo_polygon_metrics",
-    "geo_point_in_polygon",
-    "geo_polygon_holes",
-    "geo_geodesic_area",
-    "geo_lcc_reproject",
-    "geo_spatial_join_blocked",
-    "geo_zorder_key",
-    "geo_albers_roundtrip",
-    "geo_polar_roundtrip",
-    "geo_nearest_station",
-    "reshape_pivot",
-    "reshape_unpivot",
-    "reshape_explode",
-    "reshape_upsert_latest",
-    "reshape_global_index",
-    "reshape_scd2_build",
-    "reshape_snapshot_diff",
-    "scalar_date_arith",
-    "scalar_string_extended",
-    "pipeline_skew_diagnostics",
-)
-
-
-#: queries whose SEMANTICS changed in a given build round: their prior
-#: verdicts are the least trustworthy of all, so they jump even the stale
-#: queue UNTIL a driver verdict from >= that round re-greens them (then the
-#: pin self-retires — it must not burn front-50 slots forever).
-#: Retire invariant (ADVICE r08): the driver's sweep runs strictly at END
-#: of round, after the builder's final commit, so CORRECTNESS_r{N}.json is
-#: always graded at post-change HEAD for semantics changed in round N —
-#: min_round == change_round is therefore safe. If the driver ever sweeps
-#: mid-round, bump pins to change_round + 1.
-#: r08 pins (llm_ann_batch_topk, llm_lsh_quality) retired: driver-green in
-#: CORRECTNESS_r08 under the new semantics.
-#: r09: the giant-basket guard (queries/graph.py MAX_BASKET_LINES) is
-#: value-identical at every testdata SF (the cap never binds on <=7-line
-#: TPC-H orders; 6/6 re-verified locally at sf0.01), but the shared pairs
-#: plan changed under all six graph queries and their r08-era verdicts
-#: rank too late in the 97-deep stale queue to re-verify naturally — pin
-#: them so the r09 sweep re-grades the new plan, then self-retire.
-#: r10 status: ALL SIX retired — CORRECTNESS_r09 graded each fully green
-#: (verified via _green_in_round at r10 start), so none is served; the
-#: entries stay as the audit record of what was pinned and why.
-#: r10: chunked_running_sum's phase-3 join became null-safe (ADVICE r09
-#: — value-identical on null-free testdata, verified by oracle at
-#: sf0.01, but the executed join plan changed) — pin its one consumer so
-#: the r10 sweep re-grades the new plan, then self-retire, exactly the
-#: r09 graph-family precedent.
-_SEMANTICS_CHANGED: dict[str, int] = {
-    "graph_pagerank": 9,
-    "graph_triangle_count": 9,
-    "graph_clustering_coefficient": 9,
-    "graph_degree_stats": 9,
-    "graph_common_neighbors": 9,
-    "graph_khop_reach": 9,
-    "window_running_sum_chunked": 10,
-}
-
-
-def _green_in_round(name: str, min_round: int) -> bool:
-    """True if CORRECTNESS_r{N}.json with N >= min_round records the query
-    fully green (the pin-retire check for _SEMANTICS_CHANGED)."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m or int(m.group(1)) < min_round:
-            continue
-        try:
-            with open(path) as f:
-                r = json.load(f).get(name)
-        except Exception:
-            continue
-        if not isinstance(r, dict):
-            continue
-        if (
-            not r.get("err")
-            and r.get("rows_match")
-            and r.get("schema_match") is not False
-            and r.get("hash_match") is not False
-        ):
-            return True
-        # oracle-less queries get a rows-only verdict (err='no_oracle',
-        # rows_match absent) — accept it exactly as _previously_verified
-        # does, or a pinned oracle-less query would burn a front-50 slot
-        # every round forever (ADVICE r08). Mirror that function's guard
-        # too (ADVICE r09): if the query has since GAINED an oracle, a
-        # stale rows-only verdict must not retire the pin — the new
-        # oracle has to be checked first.
-        if (
-            r.get("err") == "no_oracle"
-            and r.get("spark_rows") is not None
-            and name not in ORACLES
-        ):
-            return True
-    return False
-
-
-def _previously_verified() -> set[str]:
-    """Names already driver-green in any prior round's CORRECTNESS_r*.json.
-
-    The driver's correctness sweep evaluates the registry in dict order and
-    stops after a fixed budget (r01 and r02 both covered exactly the first
-    50 entries). Rotating already-verified queries to the back means each
-    round's sweep spends its budget on entries with no verdict yet, so the
-    union of CORRECTNESS_r*.json files converges to full registry coverage.
-    """
-    here = os.path.dirname(os.path.abspath(__file__))
-    green: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        try:
-            with open(path) as f:
-                results = json.load(f)
-        except Exception:
-            continue
-        for name, r in results.items():
-            if not isinstance(r, dict):
-                continue
-            if r.get("err") == "no_oracle" and r.get("spark_rows") is not None:
-                # rows-only-by-design query already swept; re-running it
-                # can't upgrade the verdict UNLESS an oracle has been
-                # added since — then it must queue as unverified again.
-                if name not in ORACLES:
-                    green.add(name)
-                continue
-            if r.get("err"):
-                continue
-            if r.get("rows_match") and r.get("schema_match") is not False and r.get("hash_match") is not False:
-                green.add(name)
-    return green
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -253,70 +27,27 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["q1_pricing_summary"](spark, SMOKE_SF_DIR)
 
 
+def _releasing(fn):
+    # Release the PREVIOUS query's tracked persists before building the
+    # next one: by the time a sweep asks for query N+1, query N's
+    # consuming action has run, so its caches are dead weight — without
+    # this a 290-query sweep session accumulates every invocation's
+    # entries until session end. The current query's own persists are
+    # untouched (registered only when fn runs, released on the NEXT call).
+    @functools.wraps(fn)
+    def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
+        release_tracked_caches()
+        return fn(spark, sf_dir)
+
+    return wrapper
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.
-
-    Ordered so a budget-capped sweep maximizes VERDICT VALUE (r07 item
-    3): first the judge-flagged priority queries and every entry with no
-    verdict yet (new additions), then the staleness-ranked already-
-    verified entries from the generated SWEEP_ORDER — queries whose
-    defining module changed AFTER the round that graded them, oldest
-    verdict first (tools/rotation.py recomputes it from git history +
-    CORRECTNESS_r*.json each round) — then everything else. A full sweep
-    still re-verifies the whole registry."""
-    import functools
-
-    from cartodb_importer_spark.caching import release_tracked_caches
-
-    def _releasing(fn):
-        # Release the PREVIOUS query's tracked persists before building
-        # the next one (r13, VERDICT r12 item 2): by the time the sweep
-        # asks for query N+1, query N's consuming action has run, so its
-        # caches are dead weight — without this a 290-query sweep session
-        # accumulates every invocation's entries until session end. The
-        # current query's own persists are untouched (registered only
-        # when fn runs, released on the NEXT call).
-        @functools.wraps(fn)
-        def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-            release_tracked_caches()
-            return fn(spark, sf_dir)
-
-        return wrapper
-
-    verified = _previously_verified()
-    ordered: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for name in _PRIORITY:
-        if name in QUERIES and name not in verified:
-            ordered[name] = QUERIES[name]
-    for name, fn in QUERIES.items():
-        if name not in ordered and name not in verified:
-            ordered[name] = fn
-    # Semantics-changed pins (self-retiring — see _SEMANTICS_CHANGED)
-    for name, rnd in _SEMANTICS_CHANGED.items():
-        if (
-            name in QUERIES
-            and name not in ordered
-            and not _green_in_round(name, rnd)
-        ):
-            ordered[name] = QUERIES[name]
-    try:
-        from cartodb_importer_spark.queries._rotation import SWEEP_ORDER
-    except ImportError:
-        SWEEP_ORDER = ()
-    for name in SWEEP_ORDER:
-        if name in QUERIES and name not in ordered:
-            ordered[name] = QUERIES[name]
-    for name, fn in QUERIES.items():
-        if name not in ordered:
-            ordered[name] = fn
-    return {name: _releasing(fn) for name, fn in ordered.items()}
+    """Every registered query, in registration order."""
+    return {name: _releasing(fn) for name, fn in QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per query (omitted => rows-only check).
-
-    Ordered identically to queries() — the sweep rotation must hold
-    whichever dict the driver iterates."""
-    return {
-        name: ORACLES[name] for name in queries() if name in ORACLES
-    }
+    """DuckDB-equivalent SQL per query (omitted => rows-only check), in
+    the same order as queries()."""
+    return {name: ORACLES[name] for name in QUERIES if name in ORACLES}

@@ -90,8 +90,7 @@ def _import_corpus() -> list[str]:
         for i in range(IMPORT_FILES)
     ]
     # done-marker guards against a half-generated cache from an interrupted
-    # run passing the bare exists() check (ADVICE r08, same fix as
-    # tools/import_scale.py).
+    # run passing the bare exists() check (ADVICE r08).
     done = os.path.join(out, ".corpus_complete")
     if os.path.exists(done) and all(os.path.exists(p) for p in paths):
         return paths

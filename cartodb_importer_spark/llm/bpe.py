@@ -203,8 +203,7 @@ def bpe_train(
     through the full merge list. That keeps per-round work at one fold +
     one shuffle — O(n_merges) total token passes, not O(n_merges^2) —
     which is what makes a real multi-thousand-merge vocabulary feasible
-    (VERDICT r3 item 5; the 64-merge 10x run lives in
-    tools/stress_10x.py)."""
+    (VERDICT r3 item 5; SCALE.md records the 64-merge 10x run)."""
     out: list[tuple[str, str, int]] = []
     state = df.select(char_tokens(F.col(text_col), max_chars).alias("toks"))
     # conditional parallelism floor (r12): a single-row-group corpus scan

@@ -453,117 +453,6 @@ class VersionedLocalCatalog(LocalCatalog):
         return int(obs.get["n_rows"])
 
 
-class DeltaCatalog(Catalog):
-    """Delta Lake warehouse (roadmap §8.1.6): same publish protocol over
-    delta-format table directories. Requires the ``delta-spark`` package
-    (delta.io, Apache-licensed) on the classpath — constructor raises
-    ImportError without it, and tests skip.
-
-    On Delta the staging+rename dance is belt-and-braces: each write is
-    already an atomic transaction-log commit, so readers never see partial
-    tables even mid-write; rename keeps the reference's name-swap contract
-    (and its audit trail of `importing_*` staging names) intact."""
-
-    def __init__(self, spark: SparkSession, warehouse: str):
-        import importlib
-
-        if importlib.util.find_spec("delta") is None:
-            raise ImportError("delta-spark not installed")
-        self.spark = spark
-        self.warehouse = warehouse
-        os.makedirs(warehouse, exist_ok=True)
-
-    def _path(self, name: str) -> str:
-        return os.path.join(self.warehouse, name)
-
-    def table_names(self) -> list[str]:
-        return sorted(
-            d
-            for d in os.listdir(self.warehouse)
-            if os.path.isdir(os.path.join(self._path(d), "_delta_log"))
-        )
-
-    def write(self, df: DataFrame, name: str) -> None:
-        df.write.format("delta").mode("errorifexists").save(self._path(name))
-
-    def rename(self, old: str, new: str) -> None:
-        os.rename(self._path(old), self._path(new))
-
-    def drop(self, name: str) -> None:
-        shutil.rmtree(self._path(name), ignore_errors=True)
-
-    def read(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.format("delta").load(self._path(name))
-
-
-class IcebergCatalog(Catalog):
-    """Apache Iceberg warehouse (roadmap §8.1.6): the publish protocol
-    over Iceberg tables managed by a Spark ``hadoop`` catalog. Requires
-    the ``iceberg-spark-runtime`` jar on the session classpath —
-    the constructor probes for it and raises ImportError without it, so
-    tests skip in jar-less containers (same gating contract as
-    DeltaCatalog).
-
-    Like Delta, every Iceberg write is an atomic metadata-pointer swap,
-    so the reference's staging+rename dance (importer.rb:355,389) is
-    belt-and-braces; RENAME goes through Iceberg's own
-    ``ALTER TABLE .. RENAME TO`` so the metadata location stays
-    consistent (a filesystem mv would orphan the metadata's absolute
-    paths — the one operational difference from the Delta/local
-    catalogs)."""
-
-    CATALOG = "graft_iceberg"
-
-    def __init__(self, spark: SparkSession, warehouse: str):
-        self.spark = spark
-        self.warehouse = warehouse
-        os.makedirs(warehouse, exist_ok=True)
-        spark.conf.set(
-            f"spark.sql.catalog.{self.CATALOG}",
-            "org.apache.iceberg.spark.SparkCatalog",
-        )
-        spark.conf.set(f"spark.sql.catalog.{self.CATALOG}.type", "hadoop")
-        spark.conf.set(
-            f"spark.sql.catalog.{self.CATALOG}.warehouse", warehouse
-        )
-        try:  # probe: the class only resolves with the runtime jar present
-            spark.sql(f"SHOW TABLES IN {self.CATALOG}.db").collect()
-        except Exception as exc:  # noqa: BLE001 — any failure means no jar
-            if "CREATE NAMESPACE" in str(exc) or "SCHEMA_NOT_FOUND" in str(
-                exc
-            ):
-                spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {self.CATALOG}.db")
-            else:
-                raise ImportError(
-                    "iceberg-spark-runtime jar not on classpath"
-                ) from exc
-
-    def _ident(self, name: str) -> str:
-        return f"{self.CATALOG}.db.`{name}`"
-
-    def table_names(self) -> list[str]:
-        return sorted(
-            r["tableName"]
-            for r in self.spark.sql(
-                f"SHOW TABLES IN {self.CATALOG}.db"
-            ).collect()
-        )
-
-    def write(self, df: DataFrame, name: str) -> None:
-        df.writeTo(self._ident(name)).using("iceberg").create()
-
-    def rename(self, old: str, new: str) -> None:
-        self.spark.sql(
-            f"ALTER TABLE {self._ident(old)} RENAME TO {self._ident(new)}"
-        )
-
-    def drop(self, name: str) -> None:
-        self.spark.sql(f"DROP TABLE IF EXISTS {self._ident(name)}")
-
-    def read(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.table(self._ident(name))
-
-
 class JdbcCatalog(Catalog):
     """Postgres over JDBC. DataFrame writes go through df.write.jdbc with
     batchsize/numPartitions tuned for bulk load; DDL (rename/drop/index/

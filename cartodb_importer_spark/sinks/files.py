@@ -15,6 +15,7 @@ import re
 import shutil
 import tempfile
 import zipfile
+from xml.sax.saxutils import escape
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, Row
@@ -153,6 +154,14 @@ def _wkt_to_kml(wkt: str | None) -> str:
     return ""
 
 
+def _kml_data(name: str, texts: list[str]) -> list[str]:
+    """One column's ``<Data>`` elements, XML-escaped."""
+    name = escape(name, {'"': "&quot;"})
+    return [
+        f'<Data name="{name}"><value>{escape(v)}</value></Data>' for v in texts
+    ]
+
+
 def export_kmz(
     df: DataFrame, name: str, out_dir: str, geom_col: str = "the_geom"
 ) -> str:
@@ -161,8 +170,7 @@ def export_kmz(
     os.makedirs(out_dir, exist_ok=True)
     table = _fetch_capped(df)  # export-to-download path: bounded by the cap
     attrs = [
-        [f'<Data name="{f.name}"><value>{v}</value></Data>'
-         for v in _texts(table.column(f.name), f.dataType)]
+        _kml_data(f.name, _texts(table.column(f.name), f.dataType))
         for f in df.schema.fields
         if f.name != geom_col
     ]

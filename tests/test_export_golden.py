@@ -100,6 +100,29 @@ def test_fetched_values_render_like_collected_rows(spark, tmp_path):
         assert _texts(table.column(field.name), field.dataType) == want, field
 
 
+def test_kmz_escapes_markup_in_names_and_values(spark, tmp_path):
+    import xml.etree.ElementTree as ET
+
+    from pyspark.sql import types as st
+
+    from cartodb_importer_spark.sinks.files import export_kmz
+
+    values = ["Fish & Chips <Ltd>", 'say "hi"', "a > b", "plain"]
+    schema = st.StructType(
+        [
+            st.StructField('n&<"m">', st.StringType()),
+            st.StructField("the_geom", st.StringType()),
+        ]
+    )
+    df = spark.createDataFrame([(v, "POINT(1.0 2.0)") for v in values], schema)
+    with zipfile.ZipFile(export_kmz(df, "esc", str(tmp_path))) as zf:
+        root = ET.fromstring(zf.read("doc.kml"))
+    ns = "{http://www.opengis.net/kml/2.2}"
+    data = root.iter(f"{ns}Data")
+    got = [(d.get("name"), d.find(f"{ns}value").text) for d in data]
+    assert got == [('n&<"m">', v) for v in values]
+
+
 if __name__ == "__main__":
     import tempfile
 

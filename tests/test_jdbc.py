@@ -121,39 +121,6 @@ def test_postgres_importer_end_to_end(spark, pg_catalog, tmp_path):
         pg_catalog.drop("pgstores")
 
 
-def test_delta_catalog_publish(spark, tmp_path):
-    """Delta lakehouse publish (skips without delta-spark): same staged
-    protocol, transaction-log atomicity underneath."""
-    import importlib
-
-    from cartodb_importer_spark.sinks.catalog import DeltaCatalog
-
-    if importlib.util.find_spec("delta") is None:
-        pytest.skip("delta-spark not installed")
-    cat = DeltaCatalog(spark, str(tmp_path / "lake"))
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, name string")
-    assert cat.publish(df, "dtab") == 2
-    assert cat.table_names() == ["dtab"]
-    with pytest.raises(ValueError, match="already exists"):
-        cat.publish(df, "dtab")
-
-
-def test_iceberg_catalog_publish(spark, tmp_path):
-    """IcebergCatalog runs the same publish protocol over an Iceberg
-    hadoop catalog; skips without the iceberg-spark-runtime jar."""
-    from cartodb_importer_spark.sinks.catalog import IcebergCatalog
-
-    try:
-        cat = IcebergCatalog(spark, str(tmp_path / "berg"))
-    except ImportError:
-        pytest.skip("iceberg-spark-runtime jar not on classpath")
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, name string")
-    assert cat.publish(df, "itab") == 2
-    assert cat.table_names() == ["itab"]
-    with pytest.raises(ValueError, match="already exists"):
-        cat.publish(df, "itab")
-
-
 def test_versioned_publish_keeps_snapshots(spark, tmp_path):
     """VersionedLocalCatalog: re-publishing replaces the live table
     atomically and retains prior snapshots as readable versions, pruned
