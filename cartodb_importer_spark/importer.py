@@ -26,6 +26,7 @@ from pyspark.sql import SparkSession
 
 from . import naming
 from .georef import georeference_points, rebuild_the_geom
+from .infer import apply_inferred_types, lattice_max, types_of
 from .sinks.catalog import Catalog
 
 
@@ -91,17 +92,25 @@ class Importer:
                     naming.sanitize(meta["suggested_name"]),
                     self.catalog.table_names(),
                 )
-            # O9 empty guard (importer.rb:238-242) — enforced inside
-            # publish (reject_empty below), where the emptiness check
-            # rides the staging write's Observation instead of paying a
-            # dedicated isEmpty() job per file; an empty input still
-            # raises ValueError("Empty table") with nothing published.
+            # O9 empty guard (importer.rb:238-242) — enforced inside the
+            # staging write (reject_empty below), where the emptiness check
+            # rides the write's Observation instead of paying a dedicated
+            # isEmpty() job per file; an empty input still raises
+            # ValueError("Empty table") with nothing published.
             # O10 name sanitation (readers already sanitize; idempotent)
-            df = df.toDF(*naming.sanitize_columns(df.columns))
+            names = naming.sanitize_columns(df.columns)
+            # a CSV arrives string-typed with the lattice of its head
+            types = meta.get("head_types")
+            if types is not None:
+                types = dict(zip(names, types.values()))
+            df = df.toDF(*names)
             # O11 GeoJSON the_geom rebuild — only when the column holds
             # GeoJSON text. A driver-side reader reports that from the
             # column it holds; for a distributed reader one non-null cell
-            # is probed (one Spark job).
+            # is probed (one Spark job). The probe runs before the type
+            # check is attached: an Observation keeps the metrics of the
+            # first action over its frame, and a first() sees one row.
+            geojson = False
             if "the_geom" in df.columns:
                 geojson = meta.get("the_geom_geojson")
                 if geojson is None:
@@ -112,74 +121,41 @@ class Importer:
                     )
                     geojson = bool(probe) and str(probe[0]).lstrip().startswith("{")
                 if geojson:
-                    df = rebuild_the_geom(df)
                     self.log("rebuilt the_geom from GeoJSON")
-            # O12/O13 lat-lon georeferencing
-            before_cols = set(df.columns)
-            df = georeference_points(df)
-            if "the_geom" in set(df.columns) - before_cols:
+            frame, type_obs, geo_obs = self._frame(df, types, geojson)
+            if "the_geom" in frame.columns and "the_geom" not in df.columns:
                 self.log("georeferenced POINT from lat/lon columns")
-            # O15/O17 staged publish + O19 count, with Observation metrics
-            # riding the write action (no extra job — the Spark-native form
-            # of the reference's runlog row accounting)
-            from pyspark.sql import Observation
-            from pyspark.sql import functions as F
-
-            obs = None
-            if "the_geom" in df.columns:
-                obs = Observation("import_metrics")
-                df = df.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.sum(
-                        F.col("the_geom").isNull().cast("int")
-                    ).alias("n_null_geom"),
+            # O15/O17 staged publish + O19 count: one write lands the rows,
+            # and its Observations count them, count null geometries and
+            # check the guessed column types (no extra job — the
+            # Spark-native form of the reference's runlog row accounting)
+            staging = None
+            try:
+                staging, rows = self.catalog.stage(
+                    frame, self.suggested_name, reject_empty=True
                 )
-            # Publish with collision retry: the name was unique when this
-            # import derived it, but a concurrent import can win it in the
-            # meantime — in a fleet, archive explosion retargets names mid-
-            # run (importer.rb:106), AFTER import_fleet's pre-reservation,
-            # so N zips sharing one member stem all race for the same table
-            # (found by the r09 mixed-format rehearsal). The no-clobber
-            # guard makes the loser safe; re-deriving against the live
-            # catalog and retrying gives it the reference's _n suffix
-            # behavior instead of a failed import.
-            attempts = 0
-            while True:
-                try:
-                    rows = self.catalog.publish(
-                        df, self.suggested_name, reject_empty=True
-                    )
-                    break
-                except (ValueError, OSError) as exc:
-                    # Only genuine name collisions retry (ADVICE r09: a
-                    # bare-OSError catch re-published full datasets on
-                    # disk-full etc.): publish's explicit no-clobber
-                    # ValueError, or LocalCatalog's rename losing the
-                    # race (EEXIST/ENOTEMPTY on the target dir).
-                    is_collision = (
-                        isinstance(exc, ValueError)
-                        and "already exists" in str(exc)
-                    ) or (
-                        isinstance(exc, OSError)
-                        and exc.errno in (errno.EEXIST, errno.ENOTEMPTY)
-                    )
-                    attempts += 1
-                    if (
-                        not is_collision
-                        or attempts > 8
-                        or not self.catalog.exists(self.suggested_name)
-                    ):
-                        raise  # not a name collision (or livelock): surface
-                    self.suggested_name = naming.get_valid_name(
-                        self.suggested_name, self.catalog.table_names()
-                    )
-                    self.log(
-                        f"publish collision, retrying as {self.suggested_name}"
-                    )
+                if type_obs is not None:
+                    written = {c: t or "varchar" for c, t in types.items()}
+                    exact = {**written, **types_of(type_obs.get)}
+                    if exact != written:
+                        # a cell past the head moved a column up the
+                        # lattice: stage again with the exact types
+                        self.catalog.drop(staging)
+                        staging = None
+                        moved = {c: t for c, t in exact.items() if t != written[c]}
+                        self.log(f"head-sample types corrected: {moved}")
+                        frame, _, geo_obs = self._frame(df, exact, geojson)
+                        staging, rows = self.catalog.stage(
+                            frame, self.suggested_name, reject_empty=True
+                        )
+                self._commit(staging)
+            except BaseException:
+                if staging is not None:
+                    self.catalog.drop(staging)
+                raise
             self.log(f"published {self.suggested_name} ({rows} rows)")
-            if obs is not None:
-                metrics = obs.get
+            if geo_obs is not None:
+                metrics = geo_obs.get
                 self.log(
                     f"georef metrics: {metrics['n_null_geom']} of "
                     f"{metrics['n_rows']} rows have null geometry"
@@ -193,6 +169,79 @@ class Importer:
         finally:
             # O20 ensure: unlink temp files (importer.rb:469-475)
             shutil.rmtree(workdir, ignore_errors=True)
+
+    @staticmethod
+    def _frame(df, types: dict | None, geojson: bool):
+        """The frame the import writes, with the Observations its write
+        fills: (frame, type check or None, georef metrics or None).
+
+        ``types`` (a CSV's) casts the string columns, and the type check
+        observes the lattice of every column typed below varchar (None:
+        no non-blank cell seen yet). The other readers hand over typed
+        frames (``types`` None)."""
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
+        type_obs = None
+        if types is not None:
+            checked = [c for c, t in types.items() if t != "varchar"]
+            if checked:
+                type_obs = Observation()
+                df = df.observe(type_obs, *[lattice_max(c) for c in checked])
+            df = apply_inferred_types(df, types)
+        if geojson:
+            df = rebuild_the_geom(df)
+        # O12/O13 lat-lon georeferencing
+        df = georeference_points(df)
+        geo_obs = None
+        if "the_geom" in df.columns:
+            geo_obs = Observation()
+            df = df.observe(
+                geo_obs,
+                F.count(F.lit(1)).alias("n_rows"),
+                F.sum(F.col("the_geom").isNull().cast("int")).alias("n_null_geom"),
+            )
+        return df, type_obs, geo_obs
+
+    def _commit(self, staging: str) -> None:
+        """Rename the staged table in, retrying a name collision: the name
+        was unique when this import derived it, but a concurrent import
+        can win it in the meantime — in a fleet, archive explosion
+        retargets names mid-run (importer.rb:106), AFTER import_fleet's
+        pre-reservation, so N zips sharing one member stem all race for
+        the same table (found by the r09 mixed-format rehearsal). The
+        no-clobber guard makes the loser safe; re-deriving against the
+        live catalog and renaming again gives it the reference's _n
+        suffix behavior instead of a failed import, without writing the
+        rows again."""
+        attempts = 0
+        while True:
+            try:
+                self.catalog.commit(staging, self.suggested_name)
+                return
+            except (ValueError, OSError) as exc:
+                # Only genuine name collisions retry (ADVICE r09: a
+                # bare-OSError catch re-published full datasets on
+                # disk-full etc.): commit's explicit no-clobber
+                # ValueError, or LocalCatalog's rename losing the
+                # race (EEXIST/ENOTEMPTY on the target dir).
+                is_collision = (
+                    isinstance(exc, ValueError) and "already exists" in str(exc)
+                ) or (
+                    isinstance(exc, OSError)
+                    and exc.errno in (errno.EEXIST, errno.ENOTEMPTY)
+                )
+                attempts += 1
+                if (
+                    not is_collision
+                    or attempts > 8
+                    or not self.catalog.exists(self.suggested_name)
+                ):
+                    raise  # not a name collision (or livelock): surface
+                self.suggested_name = naming.get_valid_name(
+                    self.suggested_name, self.catalog.table_names()
+                )
+                self.log(f"publish collision, retrying as {self.suggested_name}")
 
 
 class Exporter:

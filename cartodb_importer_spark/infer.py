@@ -1,13 +1,17 @@
-"""CSV sniffing + distributed schema inference (SURVEY §2.2, O25-O27).
+"""CSV sniffing + type inference (SURVEY §2.2, O25-O27).
 
 The reference's ``guess_schema`` (importer.rb:480-560) types CSV columns
 with per-cell regexes and a monotone promotion lattice
 ``integer < float < varchar`` (blanks skipped, int32 overflow promotes
-integer -> float). Its row-at-a-time loop becomes ONE Spark aggregate job
-here: the lattice is an ordinal max, so inference over 100 TB is a single
-map-side-combined pass. A spreadsheet is decoded on the driver, so its
-columns are typed where they already are: the same lattice and casts run
-on its ``pyarrow.Table`` with ``pyarrow.compute``, and no Spark job runs.
+integer -> float). The lattice is an ordinal max, so one expression,
+``cell_ordinal``, types a cell wherever the rows are: in a Spark aggregate
+(``infer_column_types`` on a DataFrame, one map-side-combined pass), or in
+an Observation riding an import's publish write (``lattice_max``), which
+is how ``Importer.run`` checks the types ``read_csv`` guessed from the
+file head without a pass of its own. A spreadsheet, or a CSV head, is
+on the driver, so its columns are typed where they already are: the same
+lattice and casts run on its ``pyarrow.Table`` with ``pyarrow.compute``,
+and no Spark job runs.
 
 Cells the lattice admits but Spark's cast cannot parse (``1|5`` matches
 FLOAT_RX; a trailing U+0085 passes Java's ``$``) become NULL: the casts
@@ -31,7 +35,7 @@ import re
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as st
 
@@ -55,40 +59,60 @@ _FLOAT_RE2 = FLOAT_RX[:-1] + _JAVA_EOL
 _CASTABLE_RE2 = r"^(?P<n>-?[0-9]+(?:\.[0-9]+)?)(?:\r\n|[\n\r])?$"
 
 
+def cell_ordinal(cell: Column) -> Column:
+    """A string cell's place in the lattice: 0 integer, 1 float, 2 varchar,
+    NULL for a blank cell. Only a cell of 10 or more characters can pass
+    INT32_MAX, so the length test spares every shorter integer the double
+    cast; And evaluates its right side only when the left is true."""
+    return (
+        F.when(cell.isNull() | ~cell.rlike(r"\S"), F.lit(None))
+        .when(
+            cell.rlike(INT_RX),
+            F.when(
+                (F.length(cell) >= 10) & (cell.try_cast("double") > INT32_MAX), 1
+            ).otherwise(0),
+        )
+        .when(cell.rlike(FLOAT_RX), F.lit(1))
+        .otherwise(F.lit(2))
+    )
+
+
+def lattice_max(column: str) -> Column:
+    """The lattice aggregate of one column, named after it: NULL when the
+    column holds no non-blank cell."""
+    return F.max(cell_ordinal(F.col(column))).alias(column)
+
+
+def types_of(ordinals: dict, default: str | None = "varchar") -> dict:
+    """{column: lattice ordinal or None} -> {column: type}; a column that
+    never held a non-blank value gets ``default`` (importer.rb:557)."""
+    return {
+        c: _ORD_TO_TYPE[o] if o is not None else default
+        for c, o in ordinals.items()
+    }
+
+
 def infer_column_types(
-    data: DataFrame | pa.Table, columns: list[str] | None = None
+    data: DataFrame | pa.Table,
+    columns: list[str] | None = None,
+    default: str | None = "varchar",
 ) -> dict[str, str]:
     """§2.2 inference: per column, ``max(ordinal(cell))`` with blanks
     contributing nothing. A DataFrame is typed by one distributed
     aggregate; a ``pyarrow.Table`` on the driver, with no Spark job.
 
     Returns {column: 'integer'|'float'|'varchar'} — columns that never held
-    a non-blank value default to 'varchar' (importer.rb:557).
+    a non-blank value get ``default``: 'varchar' (importer.rb:557), or
+    None where the caller must tell "no evidence" from text.
     """
     if isinstance(data, pa.Table):
         columns = columns or data.column_names
         ordinals = {c: _arrow_ordinal(data[c]) for c in columns}
     else:
         columns = columns or data.columns
-        aggs = []
-        for c in columns:
-            cell = F.col(c)
-            ordinal = (
-                F.when(cell.isNull() | ~cell.rlike(r"\S"), F.lit(None))
-                .when(
-                    cell.rlike(INT_RX),
-                    F.when(cell.try_cast("double") > INT32_MAX, 1).otherwise(0),
-                )
-                .when(cell.rlike(FLOAT_RX), F.lit(1))
-                .otherwise(F.lit(2))
-            )
-            aggs.append(F.max(ordinal).alias(c))
-        row = data.agg(*aggs).first()
+        row = data.agg(*[lattice_max(c) for c in columns]).first()
         ordinals = {c: row[c] for c in columns}
-    return {
-        c: _ORD_TO_TYPE[o] if o is not None else "varchar"
-        for c, o in ordinals.items()
-    }
+    return types_of(ordinals, default)
 
 
 def _arrow_number(col: pa.ChunkedArray, to: pa.DataType) -> pa.ChunkedArray:

@@ -2,15 +2,20 @@
 type-inference semantics instead of Spark's inferSchema (whose rules differ
 — Spark infers dates/timestamps; the reference's lattice never does).
 
-Scale: the sniffers read a bounded head sample on the driver; the data scan
-and the inference aggregate are distributed. One extra pass over the data
-for inference (a single map-side-combined max), then the typed scan.
+Scale: the sniffers read a bounded head sample on the driver and the data
+scan is distributed. ``infer=True`` types the columns exactly with one
+extra pass over the data (a single map-side-combined max). With
+``infer=False`` the frame stays string-typed and ``meta["head_types"]``
+holds the lattice of the 64 KiB head's records, typed on the driver with
+no Spark job: ``Importer.run`` casts to that guess and checks it inside
+the publish write.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import naming
@@ -229,4 +234,45 @@ def read_csv(
         types = infer_column_types(df)
         df = apply_inferred_types(df, types)
         meta["inferred_types"] = types
+    else:
+        # A record of the head is trusted only where Python's csv module
+        # splits it as Spark does: not the last one when the head is cut
+        # (it may be), nor when a stray quote swallowed the rest of the
+        # file into one field (Spark reads that field up to its line end).
+        records = _head_records(
+            head.decode(source_encoding, errors="replace"), delimiter, quote
+        )
+        if len(head) == 1 << 16 or (any_odd and not multiline):
+            records = records[:-1]
+        if has_header:
+            records = records[1:]
+        head_table = pa.table(
+            {
+                n: pa.array(
+                    [r[i] if i < len(r) else None for r in records], pa.string()
+                )
+                for i, n in enumerate(names)
+            }
+        )
+        # None marks a column with no non-blank head cell: the write checks
+        # it, where a varchar guess rests on a text cell already seen
+        meta["head_types"] = infer_column_types(head_table, default=None)
     return df, meta
+
+
+def _head_records(text: str, delimiter: str, quote: str) -> list[list[str]]:
+    """The records of a decoded head sample, up to the first one Python's
+    csv module rejects."""
+    import csv as csvmod
+    import io
+
+    records = []
+    reader = csvmod.reader(
+        io.StringIO(text, newline=""), delimiter=delimiter, quotechar=quote
+    )
+    try:
+        for record in reader:
+            records.append(record)
+    except csvmod.Error:
+        pass
+    return records

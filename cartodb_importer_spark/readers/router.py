@@ -155,7 +155,8 @@ def route(
             break
 
     if ext == ".csv":
-        df, meta = read_csv(spark, path, workdir=workdir)
+        # string-typed, with a head guess the Importer checks in its write
+        df, meta = read_csv(spark, path, infer=False, workdir=workdir)
     elif ext in (".xls", ".xlsx", ".ods"):
         df, meta = read_excel(spark, path)
     elif ext in (".json", ".js", ".geojson"):

@@ -26,7 +26,8 @@ from pyspark.sql import functions as F
 
 
 class Catalog:
-    """Protocol: list/exists/rename/drop/read/write_staging/count."""
+    """Protocol: list/exists/write/rename/drop/read/count; ``publish`` is
+    ``stage`` (write a staging table) then ``commit`` (rename it in)."""
 
     def table_names(self) -> list[str]:
         raise NotImplementedError
@@ -111,23 +112,21 @@ class Catalog:
         # contract and makes staging names process- and thread-unique.
         return f"importing_{int(time.time())}_{uuid.uuid4().hex[:8]}_{name}"
 
-    def publish(
+    def stage(
         self, df: DataFrame, name: str, reject_empty: bool = False
-    ) -> int:
-        """Write staging, atomically rename, return landed row count.
-        On failure the staging table is dropped and the original table (if
-        any) is untouched — the reference's rollback contract
-        (spec/import_spec.rb:36-52: a failed import never clobbers).
+    ) -> tuple[str, int]:
+        """Write ``df`` to a fresh staging table for ``name``; return the
+        staging table's name and its row count. On failure the staging
+        table is dropped.
 
-        The landed count rides the staging write itself as an Observation
+        The count rides the staging write itself as an Observation
         metric — the write is the action that lands the rows, so counting
         there is exact and costs no extra job, where the previous
         ``count(table)`` re-scanned the just-published table (at 100 TB a
         full second read per publish). ``reject_empty=True`` applies the
         reference's empty-input guard (importer.rb:238-242) at the same
-        zero-job point: an empty staging result drops the staging table
-        and raises before the rename, so an empty table is never
-        published."""
+        zero-job point: an empty result drops the staging table and
+        raises, so an empty table is never published."""
         from pyspark.sql import Observation
 
         staging = self.staging_name(name)
@@ -138,15 +137,31 @@ class Catalog:
             rows = int(obs.get["n_rows"])
             if reject_empty and rows == 0:
                 raise ValueError("Empty table")
-            if self.exists(name):
-                self.drop(staging)
-                raise ValueError(f"table {name!r} already exists")
-            self.rename(staging, name)
         except Exception:
-            try:
-                self.drop(staging)
-            finally:
-                pass
+            self.drop(staging)
+            raise
+        return staging, rows
+
+    def commit(self, staging: str, name: str) -> None:
+        """Atomically rename a staged table to ``name``. Raises ValueError
+        when ``name`` exists, never clobbering it; the staged table is
+        left for the caller to commit under another name or drop."""
+        if self.exists(name):
+            raise ValueError(f"table {name!r} already exists")
+        self.rename(staging, name)
+
+    def publish(
+        self, df: DataFrame, name: str, reject_empty: bool = False
+    ) -> int:
+        """Stage, commit, return the landed row count. On failure the
+        staging table is dropped and the original table (if any) is
+        untouched — the reference's rollback contract
+        (spec/import_spec.rb:36-52: a failed import never clobbers)."""
+        staging, rows = self.stage(df, name, reject_empty)
+        try:
+            self.commit(staging, name)
+        except Exception:
+            self.drop(staging)
             raise
         return rows
 
@@ -414,16 +429,8 @@ class VersionedLocalCatalog(LocalCatalog):
         return self._read_table_dir(spark, self._path(f"{name}{self.VSEP}{v}"))
 
     def publish_version(self, df: DataFrame, name: str) -> int:
-        from pyspark.sql import Observation
-
-        staging = self.staging_name(name)
-        # landed count rides the staging write (same zero-extra-job
-        # Observation as Catalog.publish; the old count() re-read the
-        # whole just-published table)
-        obs = Observation()
-        df = df.observe(obs, F.count(F.lit(1)).alias("n_rows"))
+        staging, rows = self.stage(df, name)
         try:
-            self.write(df, staging)
             vs = self.versions(name)
             if not self.exists(name) and vs:
                 # a previous publish died between its two renames: the
@@ -445,12 +452,9 @@ class VersionedLocalCatalog(LocalCatalog):
                     self.drop(f"{name}{self.VSEP}{old}")
             self.rename(staging, name)
         except Exception:
-            try:
-                self.drop(staging)
-            finally:
-                pass
+            self.drop(staging)
             raise
-        return int(obs.get["n_rows"])
+        return rows
 
 
 class JdbcCatalog(Catalog):

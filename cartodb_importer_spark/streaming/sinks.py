@@ -60,9 +60,9 @@ def stream_to_catalog(
     most B-1, so compaction never touches a batch the engine could still
     replay. LocalCatalog-layout only — validated HERE so a
     misconfiguration fails at stream setup, not as a ValueError inside
-    the Nth micro-batch killing a running query (ADVICE r10); other
-    catalogs run their native maintenance (Delta OPTIMIZE, Iceberg
-    rewrite_data_files) out-of-band. A compaction skipped because
+    the Nth micro-batch killing a running query (ADVICE r10). A
+    JdbcCatalog table lives in its database, which has no batch
+    directories to fold; its upkeep (VACUUM) is the database's own. A compaction skipped because
     another actor holds the table's advisory lock (e.g. the lock file a
     kill left behind, within its stale window) is WARNED and counted,
     then retried at the next interval — maintenance is never worth
@@ -91,9 +91,9 @@ def stream_to_catalog(
         if not isinstance(catalog, LocalCatalog):
             raise ValueError(
                 "compact_every needs a LocalCatalog partition-dir layout; "
-                f"got {type(catalog).__name__} — run that catalog's native "
-                "maintenance (Delta OPTIMIZE, Iceberg rewrite_data_files) "
-                "out-of-band"
+                f"got {type(catalog).__name__}, which has no batch "
+                "directories to fold (a JDBC table's upkeep, e.g. VACUUM, "
+                "is its database's own)"
             )
     if landing_max_dirs is not None:
         from ..sinks.catalog import LocalCatalog

@@ -3,8 +3,10 @@
 A driver-side reader hands its columns to Spark as one Arrow table, types
 them on the driver and reports whether ``the_geom`` holds GeoJSON, so the
 publish write is the only Spark job of an import of an XLSX, SHP zip, KML,
-GPX or GeoJSON file. A KMZ or SHP export fetches its rows, under the
-driver-side row cap, with one job.
+GPX or GeoJSON file. A CSV import types its columns from the file head and
+checks them inside the publish write: one job, or two when a cell past the
+head moves a column up the lattice. A KMZ or SHP export fetches its rows,
+under the driver-side row cap, with one job.
 """
 
 from __future__ import annotations
@@ -90,6 +92,35 @@ def test_driver_decoded_import_runs_one_job(spark, catalog, tmp_path, name):
     importer = Importer(spark, catalog, str(path))
     assert _jobs(spark, lambda: results.append(importer.run())) == 1
     assert results[0].rows_imported >= 2
+
+
+def _csv(path, rows: int, late: str | None = None):
+    lines = ["id,v,name,lat,lon"]
+    lines += [f"{i},{i % 7},n{i},{i % 90}.5,{i % 180}.25" for i in range(rows)]
+    if late is not None:
+        lines[-1] = f"{rows - 1},{late},n,1.5,2.5"
+    path.write_text("\n".join(lines) + "\n")
+
+
+def test_csv_import_runs_one_job(spark, catalog, tmp_path):
+    path = tmp_path / "t.csv"
+    _csv(path, 200)
+    results = []
+    importer = Importer(spark, catalog, str(path))
+    assert _jobs(spark, lambda: results.append(importer.run())) == 1
+    assert results[0].rows_imported == 200
+
+
+def test_csv_type_change_past_the_head_runs_two_jobs(spark, catalog, tmp_path):
+    path = tmp_path / "t.csv"
+    _csv(path, 4000, late="text")
+    assert path.stat().st_size > 1 << 16
+    results = []
+    importer = Importer(spark, catalog, str(path))
+    assert _jobs(spark, lambda: results.append(importer.run())) == 2
+    assert results[0].rows_imported == 4000
+    published = catalog.read(spark, results[0].name)
+    assert dict(published.dtypes)["v"] == "string"
 
 
 @pytest.mark.parametrize("export", [fsinks.export_kmz, fsinks.export_shp_zip])

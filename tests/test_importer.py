@@ -630,9 +630,22 @@ def test_publish_collision_retries_with_fresh_suffix(spark, catalog, tmp_path):
     assert imp.suggested_name == "race"
     # another import wins the name between derivation and publish
     catalog.publish(spark.createDataFrame([(9,)], "x int"), "race")
-    res = imp.run()
+    writes = []
+    orig_write = catalog.write
+
+    def counting_write(df, name):
+        writes.append(name)
+        orig_write(df, name)
+
+    catalog.write = counting_write
+    try:
+        res = imp.run()
+    finally:
+        catalog.write = orig_write
     assert res.name == "race_1"
     assert res.rows_imported == 2
+    # the loser renames its staged table again instead of re-writing it
+    assert len(writes) == 1
     # the winner's table is untouched
     assert catalog.read(spark, "race").count() == 1
 

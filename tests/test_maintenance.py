@@ -606,6 +606,28 @@ def test_stream_to_catalog_compact_every_fails_fast(spark, tmp_path):
         )
 
 
+def test_jdbc_catalog_refusals_name_no_absent_catalog(spark, tmp_path):
+    """Both entry points refuse a JdbcCatalog, the one non-local catalog,
+    and their advice names no catalog the engine does not have."""
+    import threading
+
+    from cartodb_importer_spark.sinks.catalog import JdbcCatalog
+    from cartodb_importer_spark.streaming.sinks import stream_to_catalog
+
+    jdbc = JdbcCatalog(spark, "jdbc:postgresql://localhost:1/none")
+    rate = spark.readStream.format("rate").load()
+    with pytest.raises(ValueError) as streamed:
+        stream_to_catalog(rate, jdbc, "t", str(tmp_path / "ck1"), compact_every=2)
+    with pytest.raises(ValueError) as looped:
+        M.run_maintenance(
+            spark, jdbc, "t", str(tmp_path / "ck2"), threading.Event()
+        )
+    for err in (streamed, looped):
+        msg = str(err.value)
+        assert "LocalCatalog" in msg and "JdbcCatalog" in msg
+        assert "delta" not in msg.lower() and "iceberg" not in msg.lower()
+
+
 def test_markerless_tmp_candidates_are_ignored_and_swept(spark, tmp_path):
     """A compactor killed DURING the temp parquet write leaves a
     .base_tmp_* dir with no marker — incomplete by construction. It must
@@ -1130,8 +1152,8 @@ def test_sweep_spares_live_writer_staging_dirs(spark, tmp_path):
 
 def test_run_maintenance_refuses_non_local_catalog(spark, tmp_path):
     """Same loud refusal as compact_batches: the loop depends on the
-    LocalCatalog partition-dir layout; lakehouse catalogs run their
-    native maintenance instead."""
+    LocalCatalog partition-dir layout; a JDBC table's upkeep is its
+    database's own."""
     import threading
 
     from cartodb_importer_spark.sinks.catalog import Catalog
