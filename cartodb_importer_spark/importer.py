@@ -96,14 +96,10 @@ class Importer:
             # staging write (reject_empty below), where the emptiness check
             # rides the write's Observation instead of paying a dedicated
             # isEmpty() job per file; an empty input still raises
-            # ValueError("Empty table") with nothing published.
-            # O10 name sanitation (readers already sanitize; idempotent)
-            names = naming.sanitize_columns(df.columns)
-            # a CSV arrives string-typed with the lattice of its head
+            # ValueError("Empty table") with nothing published. Every
+            # reader returns O10-sanitized column names; a CSV arrives
+            # string-typed with the lattice of its head.
             types = meta.get("head_types")
-            if types is not None:
-                types = dict(zip(names, types.values()))
-            df = df.toDF(*names)
             # O11 GeoJSON the_geom rebuild — only when the column holds
             # GeoJSON text. A driver-side reader reports that from the
             # column it holds; for a distributed reader one non-null cell

@@ -25,7 +25,9 @@ row-order-dependent and does not distribute; we use the pure lattice (any
 text cell => varchar), which is also what the reference's comments describe.
 
 Sniffers (delimiter/encoding/quote) run driver-side over a bounded head
-sample — same as the reference, which sniffs the header line only.
+sample — same as the reference, which sniffs the header line only. The
+reference guesses the encoding with chardet; here a head that decodes as
+UTF-8 is UTF-8 and any other is latin-1.
 """
 
 from __future__ import annotations
@@ -57,6 +59,8 @@ _FLOAT_RE2 = FLOAT_RX[:-1] + _JAVA_EOL
 # What Spark's string->number cast parses among the cells the lattice
 # admits: the number, once the cast's trim drops an ASCII line terminator.
 _CASTABLE_RE2 = r"^(?P<n>-?[0-9]+(?:\.[0-9]+)?)(?:\r\n|[\n\r])?$"
+
+_SNIFF_BYTES = 1 << 20  # head sample sniff_encoding decodes
 
 
 def cell_ordinal(cell: Column) -> Column:
@@ -204,23 +208,19 @@ def sniff_quote(sample_cells: list[str]) -> str | None:
     return None
 
 
-def sniff_encoding(path: str, sample_bytes: int = 1 << 20) -> str:
-    """O26 (csv_normalizer.py:8-27): chardet over a head sample with the
-    reference's ascii->LATIN1 override; BOM wins outright."""
+def sniff_encoding(path: str) -> str:
+    """O26 (csv_normalizer.py:8-27): ``utf-8-sig`` when the file starts
+    with a BOM, ``utf-8`` when its head decodes as UTF-8, else
+    ``latin-1`` (which decodes any byte). A multi-byte character cut by
+    the end of the head is not a decode error."""
     with open(path, "rb") as f:
-        head = f.read(sample_bytes)
+        head = f.read(_SNIFF_BYTES)
     if head.startswith(codecs.BOM_UTF8):
         return "utf-8-sig"
     try:
-        import chardet
-
-        guess = (chardet.detect(head) or {}).get("encoding") or "utf-8"
-    except ImportError:
-        try:
-            head.decode("utf-8")
-            guess = "utf-8"
-        except UnicodeDecodeError:
-            guess = "latin-1"
-    if guess.lower() in ("ascii", "us-ascii"):
-        return "latin-1"  # shp_normalizer.py:55-56 override
-    return guess
+        codecs.getincrementaldecoder("utf-8")().decode(
+            head, final=len(head) < _SNIFF_BYTES
+        )
+    except UnicodeDecodeError:
+        return "latin-1"
+    return "utf-8"

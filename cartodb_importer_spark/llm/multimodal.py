@@ -93,11 +93,10 @@ _FAST_DECODERS: dict[str, object] | None = None
 
 
 def _fast_decoders() -> dict:
-    """Library-first decode dispatch, mirroring readers/raster.py's
-    rasterio-first pattern: prefer the C-backed libraries when importable
-    (Pillow for images, soundfile for audio — 100-1000x the throughput of
-    a per-symbol Python Huffman/Rice loop, which matters at 100 TB of
-    JPEGs), fall back to the hermetic pure-Python decoders in
+    """Library-first decode dispatch: prefer the C-backed libraries when
+    importable (Pillow for images, soundfile for audio — 100-1000x the
+    throughput of a per-symbol Python Huffman/Rice loop, which matters at
+    100 TB of JPEGs), fall back to the hermetic pure-Python decoders in
     llm/codecs.py otherwise. Neither library ships in this container, so
     CI exercises the fallback; the dispatch itself is tested by
     monkeypatching a fake fast decoder.

@@ -1,18 +1,17 @@
-"""CSV reader (O8 + §2.2): spark.read.csv with the reference's sniffing and
-type-inference semantics instead of Spark's inferSchema (whose rules differ
-— Spark infers dates/timestamps; the reference's lattice never does).
+"""CSV reader (O8 + §2.2): spark.read.csv with the reference's sniffing
+instead of Spark's inferSchema (whose rules differ — Spark infers
+dates/timestamps; the reference's lattice never does).
 
 Scale: the sniffers read a bounded head sample on the driver and the data
-scan is distributed. ``infer=True`` types the columns exactly with one
-extra pass over the data (a single map-side-combined max). With
-``infer=False`` the frame stays string-typed and ``meta["head_types"]``
-holds the lattice of the 64 KiB head's records, typed on the driver with
-no Spark job: ``Importer.run`` casts to that guess and checks it inside
-the publish write.
+scan is distributed. The frame stays string-typed, and
+``meta["head_types"]`` holds the §2.2 lattice of the 64 KiB head's
+records, typed on the driver with no Spark job: ``Importer.run`` casts to
+that guess and checks it inside the publish write.
 """
 
 from __future__ import annotations
 
+import codecs
 import os
 
 import pyarrow as pa
@@ -20,7 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import naming
 from ..infer import (
-    apply_inferred_types,
     infer_column_types,
     sniff_delimiter,
     sniff_encoding,
@@ -28,82 +26,35 @@ from ..infer import (
 )
 
 
-def _self_cleaning_tmpdir(prefix: str) -> str:
-    """mkdtemp whose tree is removed at interpreter exit. Staged copies
-    must outlive the LAZY Spark read that points at them, so the earliest
-    safe deletion is process end — but without registration every
-    re-encoded/BOM-stripped copy stayed in /tmp forever."""
-    import atexit
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, d, True)
-    return d
-
-
 def read_csv(
-    spark: SparkSession,
-    path: str,
-    delimiter: str | None = None,
-    encoding: str | None = None,
-    quote: str | None = None,
-    sanitize: bool = True,
-    infer: bool = True,
-    workdir: str | None = None,
+    spark: SparkSession, path: str, workdir: str
 ) -> tuple[DataFrame, dict]:
-    """Returns (typed DataFrame, metadata). Column names are sanitized per
-    O10 (blank headers -> unknow_name_<n>, reserved escapes). ``workdir``
-    is where any staged rewrite (BOM-stripped copy for headerless
-    utf-8-sig files) lands, so the importer's normal workdir cleanup
-    removes it; without one, a self-deleting temp dir is used."""
+    """Returns (string-typed DataFrame, metadata). Column names are
+    sanitized per O10 (blank headers -> unknow_name_<n>, reserved escapes).
+    ``workdir`` is where any staged rewrite (a newline-normalized copy of
+    a CR-only file, a BOM-stripped copy of a headerless utf-8-sig file)
+    lands; the caller owns it and removes it after the frame's last
+    action."""
     import csv as csvmod
     import io
 
     from pyspark.sql import types as st
 
-    encoding = encoding or sniff_encoding(path)
-    source_encoding = encoding
-
-    # Spark's CSV charset option accepts ONLY {iso-8859-1, us-ascii,
-    # utf-16, utf-16be, utf-16le, utf-32, utf-8}. Python/chardet names
-    # outside that list (latin-1 spelling differences aside: windows-1252,
-    # MacRoman, Shift_JIS, ...) would raise INVALID_PARAMETER_VALUE at
-    # scan time — the reference solves this by iconv-ing the whole file to
-    # UTF-8 (csv_normalizer.py), and we do the same with a streamed
-    # staged copy. The copy also normalizes lone-CR (classic-Mac) line
-    # endings, which Spark's line reader does not split (the reference's
-    # estaciones.csv pending spec) — Python's universal-newline decoder
-    # handles them for free. Import-file edge path only: bounded driver
-    # IO, constant memory, lands in workdir so normal cleanup removes it.
-    aliases = {
-        "latin-1": "iso-8859-1",
-        "latin1": "iso-8859-1",
-        "l1": "iso-8859-1",
-        "ascii": "us-ascii",
-        "utf8": "utf-8",
-    }
-    spark_charsets = {
-        "iso-8859-1", "us-ascii", "utf-16", "utf-16be", "utf-16le",
-        "utf-32", "utf-8",
-    }
-    norm = aliases.get(
-        encoding.lower().replace("_", "-"), encoding.lower().replace("_", "-")
-    )
+    encoding = source_encoding = sniff_encoding(path)
     with open(path, "rb") as f:
         head = f.read(1 << 16)
-    # classic-Mac detection by COUNTING, not presence: a quoted field with
-    # an embedded 0x0A (or any stray LF byte) must not mask a CR-only
-    # file, and a CRLF/LF file with a CR inside a quoted field must not
-    # trigger staging. Lone-CR terminators strictly outnumbering bare-LF
-    # bytes is the signature of a CR-only file.
+    # Spark's line reader does not split lone-CR (classic-Mac) line
+    # endings (the reference's estaciones.csv pending spec), so such a file
+    # is staged as a UTF-8 copy with LF endings — Python's universal-newline
+    # decoder splits them. Bounded driver IO, constant memory. Detection
+    # COUNTS, it does not test presence: a quoted field with an embedded
+    # 0x0A must not mask a CR-only file, and a CRLF/LF file with a CR inside
+    # a quoted field must not trigger staging. Lone-CR terminators strictly
+    # outnumbering bare-LF bytes is the signature of a CR-only file.
     crlf = head.count(b"\r\n")
     lone_cr = head.count(b"\r") - crlf
     bare_lf = head.count(b"\n") - crlf
-    cr_only = lone_cr > bare_lf
-    if (norm not in spark_charsets and encoding != "utf-8-sig") or cr_only:
-        if workdir is None:
-            workdir = _self_cleaning_tmpdir("cartodb_csv_utf8_")
+    if lone_cr > bare_lf:
         target = os.path.join(workdir, os.path.basename(path) + ".utf8.csv")
         with open(path, encoding=encoding, errors="replace") as src, open(
             target, "w", encoding="utf-8", newline="\n"
@@ -112,14 +63,11 @@ def read_csv(
                 dst.write(line if line.endswith("\n") else line + "\n")
         path = target
         encoding = "utf-8"
-        norm = "utf-8"
-    elif encoding != "utf-8-sig":
-        encoding = norm
     with open(path, encoding=encoding, errors="replace") as f:
         header_line = f.readline().rstrip("\r\n")
         sample_line = f.readline().rstrip("\r\n")
-    delimiter = delimiter or sniff_delimiter(header_line)
-    quote = quote or sniff_quote(
+    delimiter = sniff_delimiter(header_line)
+    quote = sniff_quote(
         header_line.split(delimiter) + sample_line.split(delimiter)
     ) or '"'
     # Records with embedded newlines (RFC4180 / Ruby CSV default) show up
@@ -176,11 +124,7 @@ def read_csv(
     has_header = not any(_numeric(n) for n in raw_names if n.strip())
     if not has_header:
         raw_names = [f"field_{i + 1}" for i in range(len(raw_names))]
-    names = (
-        naming.sanitize_columns(raw_names)
-        if sanitize
-        else [n or f"_c{i}" for i, n in enumerate(raw_names)]
-    )
+    names = naming.sanitize_columns(raw_names)
     schema = st.StructType(
         [st.StructField(n, st.StringType(), True) for n in names]
     )
@@ -189,23 +133,16 @@ def read_csv(
     # from `schema`, parsed driver-side with the sig-aware codec above).
     # HEADERLESS + BOM: line 1 is data, so the BOM would land inside the
     # first cell — stage a BOM-stripped copy for Spark to read instead.
-    spark_encoding = "UTF-8" if encoding == "utf-8-sig" else encoding
+    spark_encoding = "ISO-8859-1" if encoding == "latin-1" else "UTF-8"
     if not has_header and encoding == "utf-8-sig":
-        with open(path, "rb") as src:
-            bom = src.read(3)
-            if bom == b"\xef\xbb\xbf":
-                # stream-copy (never a whole-file driver read) into the
-                # import workdir so normal workdir cleanup removes it
-                import shutil
+        import shutil
 
-                if workdir is None:
-                    workdir = _self_cleaning_tmpdir("cartodb_csv_nobom_")
-                target = os.path.join(
-                    workdir, os.path.basename(path) + ".nobom.csv"
-                )
-                with open(target, "wb") as dst:
-                    shutil.copyfileobj(src, dst, 1024 * 1024)
-                path = target
+        target = os.path.join(workdir, os.path.basename(path) + ".nobom.csv")
+        with open(path, "rb") as src, open(target, "wb") as dst:
+            src.read(len(codecs.BOM_UTF8))
+            # stream-copy, never a whole-file driver read
+            shutil.copyfileobj(src, dst, 1024 * 1024)
+        path = target
     df = spark.read.csv(
         path,
         header=has_header,  # when true, skip line 1; names come from `schema`
@@ -221,6 +158,25 @@ def read_csv(
         enforceSchema=True,
         mode="PERMISSIVE",
     )
+    # A record of the head is trusted only where Python's csv module
+    # splits it as Spark does: not the last one when the head is cut
+    # (it may be), nor when a stray quote swallowed the rest of the
+    # file into one field (Spark reads that field up to its line end).
+    records = _head_records(
+        head.decode(source_encoding, errors="replace"), delimiter, quote
+    )
+    if len(head) == 1 << 16 or (any_odd and not multiline):
+        records = records[:-1]
+    if has_header:
+        records = records[1:]
+    head_table = pa.table(
+        {
+            n: pa.array(
+                [r[i] if i < len(r) else None for r in records], pa.string()
+            )
+            for i, n in enumerate(names)
+        }
+    )
     meta: dict = {
         "delimiter": delimiter,
         "encoding": source_encoding,
@@ -229,34 +185,10 @@ def read_csv(
         "has_header": has_header,
         "multiline": multiline,
         "import_type": ".csv",
-    }
-    if infer:
-        types = infer_column_types(df)
-        df = apply_inferred_types(df, types)
-        meta["inferred_types"] = types
-    else:
-        # A record of the head is trusted only where Python's csv module
-        # splits it as Spark does: not the last one when the head is cut
-        # (it may be), nor when a stray quote swallowed the rest of the
-        # file into one field (Spark reads that field up to its line end).
-        records = _head_records(
-            head.decode(source_encoding, errors="replace"), delimiter, quote
-        )
-        if len(head) == 1 << 16 or (any_odd and not multiline):
-            records = records[:-1]
-        if has_header:
-            records = records[1:]
-        head_table = pa.table(
-            {
-                n: pa.array(
-                    [r[i] if i < len(r) else None for r in records], pa.string()
-                )
-                for i, n in enumerate(names)
-            }
-        )
         # None marks a column with no non-blank head cell: the write checks
         # it, where a varchar guess rests on a text cell already seen
-        meta["head_types"] = infer_column_types(head_table, default=None)
+        "head_types": infer_column_types(head_table, default=None),
+    }
     return df, meta
 
 

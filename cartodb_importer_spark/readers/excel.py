@@ -1,9 +1,10 @@
 """Spreadsheet reader (O5, importer.rb:124-140): XLS(X)/ODS -> table.
 
 The reference converts to CSV via the roo gem, then runs the CSV path. Here
-the first sheet is extracted on the driver (openpyxl when importable) into
-string columns of a ``pyarrow.Table``, and the SAME §2.2 lattice and casts
-the CSV path runs as a Spark aggregate run on that table instead
+the first sheet is extracted on the driver by the stdlib readers below
+(XLSX and ODS are zips of XML; legacy XLS goes through readers/xls_biff.py)
+into string columns of a ``pyarrow.Table``, and the SAME §2.2 lattice and
+casts the CSV path runs as a Spark aggregate run on that table instead
 (``infer_column_types`` accepts either), so type behavior matches the CSV
 path exactly and the publish write is the import's only Spark job.
 """
@@ -21,17 +22,7 @@ from .frame import geojson_geom, to_spark
 def _load_rows(path: str) -> tuple[list[str], list[list[str | None]]]:
     ext = path.rsplit(".", 1)[-1].lower()
     if ext in ("xlsx", "xlsm"):
-        try:
-            from openpyxl import load_workbook
-        except ImportError:
-            rows = _read_xlsx_stdlib(path)
-        else:
-            wb = load_workbook(path, read_only=True, data_only=True)
-            ws = wb.worksheets[0]
-            rows = [
-                ["" if c is None else str(c) for c in row]
-                for row in ws.iter_rows(values_only=True)
-            ]
+        rows = _read_xlsx_stdlib(path)
     elif ext == "ods":
         rows = _read_ods_stdlib(path)
     else:  # legacy .xls: own BIFF8 reader (no xlrd in the dependency set)
@@ -47,7 +38,7 @@ def _load_rows(path: str) -> tuple[list[str], list[list[str | None]]]:
 
 def _first_sheet_member(zf) -> str:
     """Archive member for the workbook's FIRST sheet in workbook.xml order
-    (the order roo/openpyxl use — importer.rb:124-140), not zip-entry
+    (the order roo uses — importer.rb:124-140), not zip-entry
     order: resolve sheet[0]'s r:id through xl/_rels/workbook.xml.rels to
     its worksheet target. Falls back to lexicographic zip order only when
     the workbook/rels parts are absent or malformed."""
@@ -81,7 +72,7 @@ def _first_sheet_member(zf) -> str:
 
 
 def _read_xlsx_stdlib(path: str) -> list[list[str]]:
-    """Minimal XLSX reader: an .xlsx is a zip of XML — parse sheet1 +
+    """XLSX reader: an .xlsx is a zip of XML — parse the first sheet +
     sharedStrings with the stdlib. Covers inline/shared strings and
     numeric cells (the reference converts spreadsheets to CSV text anyway,
     so everything downstream is string-typed before inference)."""

@@ -156,7 +156,7 @@ def route(
 
     if ext == ".csv":
         # string-typed, with a head guess the Importer checks in its write
-        df, meta = read_csv(spark, path, infer=False, workdir=workdir)
+        df, meta = read_csv(spark, path, workdir)
     elif ext in (".xls", ".xlsx", ".ods"):
         df, meta = read_excel(spark, path)
     elif ext in (".json", ".js", ".geojson"):

@@ -4,8 +4,8 @@ forced 2D (importer.rb:375-386 semantics).
 
 The reference shells out to shp2pgsql and a Python normalizer probing SRID
 (with a network fallback to prj2epsg.org we deliberately drop — SURVEY §7
-risk 4); here the .prj is parsed with pyproj when available, else a small
-embedded WKT->EPSG table covering the common cases.
+risk 4); here the .prj is matched against a small embedded WKT->EPSG
+table covering the common cases, and functions/proj.py reprojects.
 
 Driver-side parse: shapefiles are capped at 2 GB by their own format, so a
 single file never needs executor parallelism; at scale the fleet of files
@@ -159,20 +159,13 @@ def _read_shapes(path: str) -> list[str | None]:
 
 
 def read_prj_epsg(prj_path: str) -> int:
-    """SRID from the .prj WKT. pyproj when importable (no network, unlike
-    the reference's prj2epsg.org fallback); else a minimal embedded match;
-    missing/unknown .prj defaults to 4326 (the reference's default when
-    shp_normalizer prints nothing usable)."""
+    """SRID from the .prj WKT by an embedded match (no network, unlike the
+    reference's prj2epsg.org fallback); a missing or unknown .prj defaults
+    to 4326 (the reference's default when shp_normalizer prints nothing
+    usable)."""
     if not os.path.exists(prj_path):
         return 4326
     wkt = open(prj_path, encoding="utf-8", errors="replace").read()
-    try:
-        from pyproj import CRS
-
-        epsg = CRS.from_wkt(wkt).to_epsg()
-        return int(epsg) if epsg else 4326
-    except Exception:
-        pass
     if "WGS_1984_Web_Mercator" in wkt or "3857" in wkt:
         return 3857
     import re
@@ -183,28 +176,17 @@ def read_prj_epsg(prj_path: str) -> int:
     if m and ("1984" in wkt or "WGS 84" in wkt):
         zone, hemi = int(m.group(1)), m.group(2)
         return (32600 if hemi == "N" else 32700) + zone
-    if "GCS_WGS_1984" in wkt or "WGS 84" in wkt:
-        return 4326
     return 4326
 
 
 def _reproject(pairs_wkt: list[str | None], srid: int) -> list[str | None]:
-    """Reproject WKT coordinate text to 4326 (O16). pyproj when importable;
-    else the built-in Krüger/Mercator kernels (functions/proj.py) cover
-    EPSG:3857 and the WGS84 UTM zones. Identity when srid is already 4326
-    or unsupported without pyproj (logged by caller)."""
-    if srid == 4326:
-        return pairs_wkt
-    transform = None
-    try:
-        from pyproj import Transformer
+    """Reproject WKT coordinate text to 4326 (O16) with the built-in
+    kernels of functions/proj.py (EPSG:3857, the WGS84 UTM zones and the
+    other codes it lists). Identity when srid is already 4326 or has no
+    kernel."""
+    from ..functions import proj
 
-        tr = Transformer.from_crs(srid, 4326, always_xy=True)
-        transform = tr.transform
-    except ImportError:
-        from ..functions import proj
-
-        transform = proj.transform_to_4326(srid)
+    transform = proj.transform_to_4326(srid)
     if transform is None:
         return pairs_wkt
     import re

@@ -1,9 +1,9 @@
 """Minimal pure-Python classic TIFF/GeoTIFF reader.
 
-Covers the subset the raster import path (O18, importer.rb:406-459) needs
-when rasterio/GDAL is absent: classic AND BigTIFF containers, either byte
-order, strip- OR tile-organized, integer or float samples, band 1, with
-the compression schemes that need no native codec:
+Covers the subset the raster import path (O18, importer.rb:406-459)
+decodes: classic AND BigTIFF containers, either byte order, strip- OR
+tile-organized, integer or float samples, band 1, with the compression
+schemes that need no native codec:
 
 * 1     — uncompressed
 * 5     — TIFF-LZW (MSB-first variable-width codes, early change)
@@ -31,8 +31,7 @@ plus (r05):
   writes); the tag-driven split-table variant (512/515-521) raises.
 
 Anything outside that subset (tag-driven old-style JPEG, JBIG, ...)
-raises ValueError so the caller can fall back to the stub — those are
-where GDAL genuinely earns its dependency.
+raises ValueError, and so does an import of such a file.
 """
 
 from __future__ import annotations

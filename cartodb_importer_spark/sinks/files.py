@@ -116,42 +116,86 @@ def export_csv_zip(df: DataFrame, name: str, out_dir: str) -> str:
     return zip_path
 
 
-_COORD = r"(-?[\d.eE+]+)\s+(-?[\d.eE+]+)"
+_NUM = r"-?[\d.]+(?:[eE][-+]?\d+)?"
+_WKT_TOKEN = re.compile(rf"(\()|(\))|({_NUM})\s+({_NUM})")
+_SIMPLE_KIND = re.compile(r"(?:MULTI)?(?:POINT|LINESTRING|POLYGON)")
+
+
+def _parse_wkt(wkt: str | None):
+    """WKT -> (kind, members), or None when it holds no coordinate.
+
+    ``kind`` is the WKT keyword. Each member is one simple geometry,
+    ``(base kind, paths)``: a POINT or LINESTRING has one path, a POLYGON
+    one per ring. A path is a list of (x, y) coordinate texts, as written.
+    A MULTI* value has a member per part, a GEOMETRYCOLLECTION the members
+    of each geometry it holds. The KML and SHP exporters both render from
+    this one parse."""
+    if not wkt:
+        return None
+    kind = wkt.split("(", 1)[0].strip()
+    if kind != "GEOMETRYCOLLECTION" and not _SIMPLE_KIND.fullmatch(kind):
+        return None
+    # a collection's geometries run from one keyword to the next
+    starts = [m.start() for m in _SIMPLE_KIND.finditer(wkt)]
+    pieces = [wkt[a:b] for a, b in zip(starts, starts[1:] + [len(wkt)])]
+    if kind != "GEOMETRYCOLLECTION":
+        pieces = pieces[:1]
+    members = [m for piece in pieces for m in _members(piece)]
+    return (kind, members) if members else None
+
+
+def _members(wkt: str) -> list[tuple[str, list]]:
+    """The simple geometries of one POINT/LINESTRING/POLYGON or MULTI*
+    value, skipping empty ones."""
+    kind = _SIMPLE_KIND.match(wkt).group()
+    base = kind.removeprefix("MULTI")
+    # nest the coordinate pairs by parentheses; a closing one past the
+    # value's own belongs to an enclosing collection
+    stack: list[list] = [[]]
+    for opening, closing, x, y in _WKT_TOKEN.findall(wkt):
+        if opening:
+            stack.append([])
+        elif closing and len(stack) > 1:
+            group = stack.pop()
+            stack[-1].append(group)
+        elif x:
+            stack[-1].append((x, y))
+    body = stack[0][0] if stack[0] else []
+    parts = body if base != kind else [body]
+    if base != "POLYGON":
+        # one path per part; a MULTIPOINT writes its points bare or each
+        # in parentheses
+        parts = [[part if isinstance(part, list) else [part]] for part in parts]
+    members = ([path for path in part if path] for part in parts)
+    return [(base, paths) for paths in members if paths]
+
+
+def _kml_coords(path: list) -> str:
+    return " ".join(f"{x},{y}" for x, y in path)
+
+
+def _kml_member(base: str, paths: list) -> str:
+    if base == "POLYGON":
+        rings = "".join(
+            ("<outerBoundaryIs>" if i == 0 else "<innerBoundaryIs>")
+            + f"<LinearRing><coordinates>{_kml_coords(r)}</coordinates></LinearRing>"
+            + ("</outerBoundaryIs>" if i == 0 else "</innerBoundaryIs>")
+            for i, r in enumerate(paths)
+        )
+        return f"<Polygon>{rings}</Polygon>"
+    tag = "Point" if base == "POINT" else "LineString"
+    return f"<{tag}><coordinates>{_kml_coords(paths[0])}</coordinates></{tag}>"
 
 
 def _wkt_to_kml(wkt: str | None) -> str:
-    if not wkt:
+    g = _parse_wkt(wkt)
+    if g is None:
         return ""
-    def coords(body: str) -> str:
-        return " ".join(
-            f"{m.group(1)},{m.group(2)}" for m in re.finditer(_COORD, body)
-        )
-    if wkt.startswith("POINT"):
-        return f"<Point><coordinates>{coords(wkt)}</coordinates></Point>"
-    if wkt.startswith("LINESTRING"):
-        return (
-            f"<LineString><coordinates>{coords(wkt)}</coordinates></LineString>"
-        )
-    def polygon_kml(rings: list[str]) -> str:
-        inner = "".join(
-            (
-                "<outerBoundaryIs>" if i == 0 else "<innerBoundaryIs>"
-            )
-            + f"<LinearRing><coordinates>{coords(r)}</coordinates></LinearRing>"
-            + ("</outerBoundaryIs>" if i == 0 else "</innerBoundaryIs>")
-            for i, r in enumerate(rings)
-        )
-        return f"<Polygon>{inner}</Polygon>"
-
-    if wkt.startswith("MULTIPOLYGON"):
-        polys = re.findall(r"\((\([^()]*\)(?:\s*,\s*\([^()]*\))*)\)", wkt)
-        parts = "".join(
-            polygon_kml(re.findall(r"\(([^()]+)\)", p)) for p in polys
-        )
-        return f"<MultiGeometry>{parts}</MultiGeometry>"
-    if wkt.startswith("POLYGON"):
-        return polygon_kml(re.findall(r"\(([^()]+)\)", wkt))
-    return ""
+    kind, members = g
+    body = "".join(_kml_member(*m) for m in members)
+    if kind.startswith("MULTI") or kind == "GEOMETRYCOLLECTION":
+        return f"<MultiGeometry>{body}</MultiGeometry>"
+    return body
 
 
 def _kml_data(name: str, texts: list[str]) -> list[str]:
@@ -195,68 +239,54 @@ def export_kmz(
     return kmz_path
 
 
-_WKT_NUM = r"-?[\d.eE+]+"
+#: ESRI shape type of each WKT kind; a GEOMETRYCOLLECTION has none
+_SHP_TYPE = {
+    "POINT": 1, "MULTIPOINT": 8, "LINESTRING": 3, "MULTILINESTRING": 3,
+    "POLYGON": 5, "MULTIPOLYGON": 5,
+}
 
 
-def _parse_wkt_parts(wkt: str | None):
-    """WKT -> ('point'|'line'|'polygon', [part -> [(x, y), ...]]) or None.
-    Covers POINT, LINESTRING, MULTILINESTRING, POLYGON (holes = parts) —
-    the geometry kinds readers/shp.py emits."""
-    if not wkt:
+def _shp_shape(wkt: str | None):
+    """(shape type, parts) of a WKT value, a part being a list of float
+    (x, y) points: a polyline's paths, a polygon's rings (MULTIPOLYGON
+    membership is carried by ring winding, so the rings are flattened —
+    the inverse of readers/shp.py's assembly), a multipoint's points as
+    one part. None when the value has no shape type or no coordinate."""
+    g = _parse_wkt(wkt)
+    if g is None or g[0] not in _SHP_TYPE:
         return None
-
-    def pts(body: str):
-        return [
-            (float(m.group(1)), float(m.group(2)))
-            for m in re.finditer(_COORD, body)
-        ]
-
-    w = wkt.strip()
-    if w.startswith("POINT"):
-        p = pts(w)
-        return ("point", [p]) if p else None
-    if w.startswith("MULTILINESTRING"):
-        parts = [pts(b) for b in re.findall(r"\(([^()]+)\)", w)]
-        return ("line", [p for p in parts if p]) or None
-    if w.startswith("LINESTRING"):
-        p = pts(w)
-        return ("line", [p]) if p else None
-    if w.startswith("POLYGON") or w.startswith("MULTIPOLYGON"):
-        # A shapefile polygon record is a flat ring list; MULTIPOLYGON
-        # membership is carried purely by ring winding, so flattening the
-        # innermost paren groups is the exact inverse of the reader's
-        # _polygon_wkt assembly.
-        parts = [pts(b) for b in re.findall(r"\(([^()]+)\)", w)]
-        return ("polygon", [p for p in parts if p]) or None
-    return None
+    kind, members = g
+    parts = [
+        [(float(x), float(y)) for x, y in path]
+        for _, paths in members
+        for path in paths
+    ]
+    if kind == "MULTIPOINT":
+        parts = [[p for part in parts for p in part]]
+    return _SHP_TYPE[kind], parts
 
 
-_SHP_TYPE = {"point": 1, "line": 3, "polygon": 5}
-
-
-def _shp_record(kind: str, parts) -> bytes:
-    """One .shp record body for a parsed geometry (ESRI shapefile spec:
-    point = type+x+y; polyline/polygon = type+bbox+counts+part index+points)."""
+def _shp_record(shape_type: int, parts: list) -> bytes:
+    """One .shp record body (ESRI shapefile spec): point = type+x+y;
+    multipoint = type+bbox+count+points; polyline/polygon =
+    type+bbox+counts+part index+points."""
     import struct
 
-    if kind == "point":
-        (x, y) = parts[0][0]
-        return struct.pack("<idd", 1, x, y)
-    allpts = [p for part in parts for p in part]
-    xs = [p[0] for p in allpts]
-    ys = [p[1] for p in allpts]
-    out = [
-        struct.pack(
-            "<i4dii",
-            _SHP_TYPE[kind], min(xs), min(ys), max(xs), max(ys),
-            len(parts), len(allpts),
-        )
-    ]
-    start = 0
-    for part in parts:
-        out.append(struct.pack("<i", start))
-        start += len(part)
-    for x, y in allpts:
+    points = [p for part in parts for p in part]
+    if shape_type == 1:
+        return struct.pack("<idd", 1, *points[0])
+    xs = [p[0] for p in points]
+    ys = [p[1] for p in points]
+    out = [struct.pack("<i4d", shape_type, min(xs), min(ys), max(xs), max(ys))]
+    if shape_type == 8:
+        out.append(struct.pack("<i", len(points)))
+    else:
+        out.append(struct.pack("<ii", len(parts), len(points)))
+        start = 0
+        for part in parts:
+            out.append(struct.pack("<i", start))
+            start += len(part)
+    for x, y in points:
         out.append(struct.pack("<dd", x, y))
     return b"".join(out)
 
@@ -265,11 +295,12 @@ def export_shp_zip(
     df: DataFrame, name: str, out_dir: str, geom_col: str = "the_geom"
 ) -> str:
     """O30/O31: zipped shapefile set (.shp/.shx/.dbf/.prj), each member
-    best-effort like the reference (exporter.rb:104-152). Point, polyline
-    (LINESTRING/MULTILINESTRING), and polygon (holes as parts) geometries;
-    a shapefile holds ONE shape type (spec), so the file's type comes from
-    the first non-null geometry and rows of any other kind export as null
-    shapes. Attributes all exported as C fields."""
+    best-effort like the reference (exporter.rb:104-152). Point,
+    multipoint, polyline (LINESTRING/MULTILINESTRING) and polygon
+    (POLYGON/MULTIPOLYGON, holes as parts) geometries; a shapefile holds
+    ONE shape type (spec), so the file's type comes from the first
+    non-null geometry and rows of any other type export as null shapes.
+    Attributes all exported as C fields."""
     import struct
 
     from ..readers.dbf import write_dbf
@@ -277,32 +308,27 @@ def export_shp_zip(
     os.makedirs(out_dir, exist_ok=True)
     table = _fetch_capped(df)
     attr_cols = [c for c in df.columns if c != geom_col]
-    geoms = (
-        [_parse_wkt_parts(w) for w in table.column(geom_col).to_pylist()]
+    shapes = (
+        [_shp_shape(w) for w in table.column(geom_col).to_pylist()]
         if geom_col in df.columns
         else [None] * table.num_rows
     )
-    file_kind = next((g[0] for g in geoms if g), "point")
+    file_type = next((g[0] for g in shapes if g), 1)
+    shapes = [g if g and g[0] == file_type else None for g in shapes]
 
     with tempfile.TemporaryDirectory() as tmp:
         base = os.path.join(tmp, name)
-        # --- .shp + .shx (null shape type 0 for missing/mismatched kinds)
-        recs = []
-        for g in geoms:
-            if g is None or g[0] != file_kind:
-                recs.append(struct.pack("<i", 0))
-            else:
-                recs.append(_shp_record(*g))
-        content_len = sum(8 + len(r) for r in recs)
-        allpts = [
-            p for g in geoms if g and g[0] == file_kind
-            for part in g[1] for p in part
+        # --- .shp + .shx (null shape type 0 for missing/mismatched types)
+        recs = [
+            _shp_record(*g) if g else struct.pack("<i", 0) for g in shapes
         ]
+        content_len = sum(8 + len(r) for r in recs)
+        allpts = [p for g in shapes if g for part in g[1] for p in part]
         xs = [p[0] for p in allpts] or [0.0]
         ys = [p[1] for p in allpts] or [0.0]
         header = struct.pack(
             ">i5ii", 9994, 0, 0, 0, 0, 0, (100 + content_len) // 2
-        ) + struct.pack("<ii4d4d", 1000, _SHP_TYPE[file_kind], min(xs), min(ys),
+        ) + struct.pack("<ii4d4d", 1000, file_type, min(xs), min(ys),
                         max(xs), max(ys), 0.0, 0.0, 0.0, 0.0)
         with open(base + ".shp", "wb") as f:
             f.write(header)
@@ -312,7 +338,7 @@ def export_shp_zip(
         with open(base + ".shx", "wb") as f:
             f.write(
                 struct.pack(">i5ii", 9994, 0, 0, 0, 0, 0, (100 + 8 * len(recs)) // 2)
-                + struct.pack("<ii4d4d", 1000, _SHP_TYPE[file_kind], min(xs),
+                + struct.pack("<ii4d4d", 1000, file_type, min(xs),
                               min(ys), max(xs), max(ys), 0.0, 0.0, 0.0, 0.0)
             )
             offset = 50

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import glob
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as st
@@ -48,7 +49,10 @@ def plan_csv_ingest(
     seed = sorted(glob.glob(os.path.join(directory, "*.csv")))
     if not seed:
         raise ValueError(f"no .csv files in {directory} to plan from")
-    df, meta = read_csv(spark, seed[0], infer=False)
+    # only the seed's columns and dialect are used, so any staged copy
+    # read_csv writes can go as soon as it returns
+    with tempfile.TemporaryDirectory(prefix="cartodb_csv_") as workdir:
+        df, meta = read_csv(spark, seed[0], workdir)
     names = df.columns
     schema = st.StructType(
         [st.StructField(n, st.StringType(), True) for n in names]

@@ -1,7 +1,7 @@
 """A CSV import types its columns from the file head and checks the guess
 inside the publish write.
 
-``read_csv(infer=False)`` types the records of the 64 KiB head on the
+``read_csv`` types the records of the 64 KiB head on the
 driver; ``Importer.run`` casts to that guess and observes the exact lattice
 of every column guessed below varchar on the write, staging again only when
 a cell past the head moved a column up. The tests here hold the published
@@ -81,7 +81,7 @@ def _published(catalog, name):
 
 
 def _expected(spark, path):
-    raw, _ = read_csv(spark, path, infer=False)
+    raw, _ = read_csv(spark, path, os.path.dirname(path))
     types = infer_column_types(raw)
     rows = [r.asDict() for r in apply_inferred_types(raw, types).collect()]
     return {c: _TYPE_OF[t] for c, t in types.items()}, sorted(rows, key=lambda r: r["id"])

@@ -134,3 +134,116 @@ if __name__ == "__main__":
         for member, data in _members(get_spark(shuffle_partitions=4), tmp).items():
             with open(os.path.join(GOLDEN, member), "wb") as f:
                 f.write(data)
+
+
+_KINDS_KML = """<kml xmlns="http://www.opengis.net/kml/2.2"><Document>
+<Placemark><name>point</name><Point><coordinates>1,2</coordinates></Point></Placemark>
+<Placemark><name>line</name><LineString><coordinates>0,0 1,1 2,0</coordinates></LineString></Placemark>
+<Placemark><name>polygon</name><Polygon>
+  <outerBoundaryIs><LinearRing><coordinates>0,0 4,0 4,4 0,0</coordinates></LinearRing></outerBoundaryIs>
+  <innerBoundaryIs><LinearRing><coordinates>1,1 2,1 2,2 1,1</coordinates></LinearRing></innerBoundaryIs>
+</Polygon></Placemark>
+<Placemark><name>multipoint</name><MultiGeometry>
+  <Point><coordinates>1,2</coordinates></Point><Point><coordinates>3,4</coordinates></Point>
+  <Point><coordinates>5,6</coordinates></Point>
+</MultiGeometry></Placemark>
+<Placemark><name>multiline</name><MultiGeometry>
+  <LineString><coordinates>0,0 1,1</coordinates></LineString>
+  <LineString><coordinates>2,2 3,3 4,4</coordinates></LineString>
+</MultiGeometry></Placemark>
+<Placemark><name>multipolygon</name><MultiGeometry>
+  <Polygon><outerBoundaryIs><LinearRing><coordinates>0,0 1,0 1,1 0,0</coordinates></LinearRing></outerBoundaryIs></Polygon>
+  <Polygon><outerBoundaryIs><LinearRing><coordinates>5,5 6,5 6,6 5,5</coordinates></LinearRing></outerBoundaryIs></Polygon>
+</MultiGeometry></Placemark>
+<Placemark><name>collection</name><MultiGeometry>
+  <Point><coordinates>1,2</coordinates></Point>
+  <LineString><coordinates>0,0 1,1</coordinates></LineString>
+</MultiGeometry></Placemark>
+</Document></kml>"""
+
+# name -> (WKT keyword the KML reader emits, KML geometry tags under the
+# Placemark in document order with their coordinate-pair counts, ESRI
+# shape type, SHP part count, SHP point count); a GEOMETRYCOLLECTION has
+# no shape type and exports as a null shape
+_KINDS = {
+    "point": ("POINT", [("Point", 1)], 1, None, 1),
+    "line": ("LINESTRING", [("LineString", 3)], 3, 1, 3),
+    "polygon": ("POLYGON", [("Polygon", None), ("LinearRing", 4),
+                            ("LinearRing", 4)], 5, 2, 8),
+    "multipoint": ("MULTIPOINT", [("MultiGeometry", None), ("Point", 1),
+                                  ("Point", 1), ("Point", 1)], 8, None, 3),
+    "multiline": ("MULTILINESTRING", [("MultiGeometry", None),
+                                      ("LineString", 2), ("LineString", 3)],
+                  3, 2, 5),
+    "multipolygon": ("MULTIPOLYGON", [("MultiGeometry", None),
+                                      ("Polygon", None), ("LinearRing", 4),
+                                      ("Polygon", None), ("LinearRing", 4)],
+                     5, 2, 8),
+    "collection": ("GEOMETRYCOLLECTION", [("MultiGeometry", None),
+                                          ("Point", 1), ("LineString", 2)],
+                   0, None, None),
+}
+
+
+def _shp_records(data: bytes) -> list[tuple[int, int | None, int | None]]:
+    """(shape type, part count, point count) of each .shp record."""
+    import struct
+
+    out, pos = [], 100
+    while pos < len(data):
+        _, words = struct.unpack(">ii", data[pos : pos + 8])
+        body = data[pos + 8 : pos + 8 + 2 * words]
+        (shape_type,) = struct.unpack("<i", body[:4])
+        if shape_type == 1:
+            out.append((1, None, 1))
+        elif shape_type == 8:
+            out.append((8, None, struct.unpack("<i", body[36:40])[0]))
+        elif shape_type in (3, 5):
+            out.append((shape_type, *struct.unpack("<ii", body[36:44])))
+        else:
+            out.append((shape_type, None, None))
+        pos += 8 + 2 * words
+    return out
+
+
+def test_every_reader_geometry_kind_exports(spark, tmp_path):
+    """Every WKT kind the readers emit (here through the KML reader, whose
+    MultiGeometry yields the MULTI* kinds and GEOMETRYCOLLECTION) exports
+    as its KML geometry and as its shapefile record, both rendered from the
+    one WKT parse."""
+    import xml.etree.ElementTree as ET
+
+    from cartodb_importer_spark.readers.kml import read_kml
+    from cartodb_importer_spark.sinks.files import export_kmz, export_shp_zip
+
+    src = tmp_path / "kinds.kml"
+    src.write_text(_KINDS_KML)
+    df, _ = read_kml(spark, str(src))
+    wkts = {r["name"]: r["the_geom"] for r in df.collect()}
+    assert {n: w.split("(", 1)[0] for n, w in wkts.items()} == {
+        n: k[0] for n, k in _KINDS.items()
+    }
+
+    ns = "{http://www.opengis.net/kml/2.2}"
+    tags = {"MultiGeometry", "Point", "LineString", "Polygon", "LinearRing"}
+    kmz = export_kmz(df.select("name", "the_geom"), "kinds", str(tmp_path))
+    with zipfile.ZipFile(kmz) as zf:
+        root = ET.fromstring(zf.read("doc.kml"))
+    for pm in root.iter(f"{ns}Placemark"):
+        name = pm.find(f".//{ns}Data[@name='name']/{ns}value").text
+        got = []
+        for el in pm.iter():
+            tag = el.tag.replace(ns, "")
+            if tag in tags:
+                coords = el.find(f"{ns}coordinates")
+                got.append((tag, None if coords is None else len(coords.text.split())))
+        assert got == _KINDS[name][1], name
+
+    for name, (_, _, shape_type, parts, points) in _KINDS.items():
+        one = spark.createDataFrame(
+            [(name, wkts[name])], "name string, the_geom string"
+        )
+        out = tmp_path / name
+        with zipfile.ZipFile(export_shp_zip(one, name, str(out))) as zf:
+            records = _shp_records(zf.read(f"{name}.shp"))
+        assert records == [(shape_type, parts, points)], name

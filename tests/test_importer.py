@@ -222,29 +222,6 @@ def test_kmz_import(spark, catalog, tmp_path):
     assert geoms == {"a": "POINT(1.5 2.5)", "b": "POINT(3.5 4.5)"}
 
 
-def test_gpx_layers(spark, tmp_path):
-    from cartodb_importer_spark.readers.gpx import read_gpx
-
-    gpx = """<?xml version="1.0"?>
-    <gpx xmlns="http://www.topografix.com/GPX/1/1" version="1.1">
-      <wpt lat="40.0" lon="-3.0"><name>w1</name></wpt>
-      <trk><name>t1</name><trkseg>
-        <trkpt lat="41.0" lon="2.0"/><trkpt lat="41.1" lon="2.1"/>
-      </trkseg></trk>
-      <rte><name>r1</name>
-        <rtept lat="50.0" lon="8.0"/><rtept lat="50.1" lon="8.1"/>
-      </rte>
-    </gpx>"""
-    p = tmp_path / "multi.gpx"
-    p.write_text(gpx)
-    tracks, _ = read_gpx(spark, str(p), layer="tracks")
-    assert tracks.first()["the_geom"] == "LINESTRING(2.0 41.0, 2.1 41.1)"
-    routes, _ = read_gpx(spark, str(p), layer="routes")
-    assert routes.first()["the_geom"] == "LINESTRING(8.0 50.0, 8.1 50.1)"
-    wpts, _ = read_gpx(spark, str(p), layer="waypoints")
-    assert wpts.first()["the_geom"] == "POINT(-3.0 40.0)"
-
-
 def test_url_import_file_scheme(spark, catalog, tmp_path):
     # O1: URL sources stage through the workdir (file:// exercises the
     # download path without network)
@@ -485,7 +462,7 @@ def test_csv_stray_quote_does_not_flip_multiline(spark, tmp_path):
     lines += [f"{i},fine" for i in range(3, 103)]
     p = tmp_path / "stray.csv"
     p.write_text("\n".join(lines) + "\n")
-    df, meta = read_csv(spark, str(p))
+    df, meta = read_csv(spark, str(p), str(tmp_path))
     assert meta["multiline"] is False
     # only the malformed row degrades; the 100 clean rows all survive
     assert df.filter("note = 'fine'").count() == 100
@@ -497,7 +474,7 @@ def test_csv_multiline_quotes_balanced(spark, tmp_path):
 
     p = tmp_path / "ml.csv"
     p.write_text('id,note\n1,"line one\nline two"\n2,plain\n')
-    df, meta = read_csv(spark, str(p))
+    df, meta = read_csv(spark, str(p), str(tmp_path))
     assert meta["multiline"] is True
     assert df.count() == 2
 
@@ -509,7 +486,7 @@ def test_csv_nan_inf_header_names_stay_header(spark, tmp_path):
 
     p = tmp_path / "nan.csv"
     p.write_text("region,NaN,Inf\nmadrid,5,7\n")
-    df, meta = read_csv(spark, str(p))
+    df, meta = read_csv(spark, str(p), str(tmp_path))
     assert meta["has_header"] is True
     assert df.count() == 1 and df.columns == ["region", "nan", "inf"]
 
@@ -521,10 +498,10 @@ def test_csv_headerless_bom_stripped(spark, tmp_path):
 
     p = tmp_path / "bom_headerless.csv"
     p.write_text("1,40.1,-3.7\n2,41.4,2.1\n", encoding="utf-8-sig")
-    df, meta = read_csv(spark, str(p))
+    df, meta = read_csv(spark, str(p), str(tmp_path))
     assert meta["has_header"] is False
     rows = sorted(r["field_1"] for r in df.collect())
-    assert rows == [1, 2]  # inferred integer — BOM would force varchar
+    assert rows == ["1", "2"]  # no U+FEFF in the first cell
 
 
 def test_csv_multiline_sniff_cap_stops_outside_quoted_field(spark, tmp_path):
@@ -543,7 +520,7 @@ def test_csv_multiline_sniff_cap_stops_outside_quoted_field(spark, tmp_path):
     lines.append("200000,tail")
     p = tmp_path / "big_multiline.csv"
     p.write_text("\n".join(lines) + "\n")
-    df, meta = read_csv(spark, str(p))
+    df, meta = read_csv(spark, str(p), str(tmp_path))
     assert meta["multiline"] is True
     assert df.filter("id = '199999'").count() == 1
     assert df.filter("id = '200000'").count() == 1
@@ -607,13 +584,13 @@ def test_cr_only_detection_counts_not_presence(spark, tmp_path):
         f'{i},"n{i}\n"\r' if i == 2 else f"{i},n{i}\r" for i in range(1, 9)
     )
     cr.write_bytes(body.encode())
-    df, _ = read_csv(spark, str(cr), infer=False)
+    df, _ = read_csv(spark, str(cr), str(tmp_path))
     assert df.count() == 8
     assert set(df.columns) == {"id", "name"}
 
     lf = tmp_path / "unix.csv"
     lf.write_bytes(b'id,name\n1,"a\rb"\n2,c\n')
-    df2, _ = read_csv(spark, str(lf), infer=False)
+    df2, _ = read_csv(spark, str(lf), str(tmp_path))
     assert df2.count() == 2
     # not staged: staging would have normalized the in-field CR to LF
     cell = {r["id"]: r["name"] for r in df2.collect()}["1"]
@@ -778,3 +755,103 @@ def test_publish_version_count_rides_the_write(spark, tmp_path):
     assert cat.publish_version(df, "t") == 50
     assert cat.publish_version(df.filter("id < 10"), "t") == 10
     assert cat.count(spark, "t") == 10
+
+
+def test_utf8_char_cut_by_sniff_head_imports_intact(spark, catalog, tmp_path):
+    """The encoding sniff reads a 1 MiB head. A UTF-8 file whose head ends
+    inside a multi-byte character is still UTF-8: the published cell holds
+    'é', not the latin-1 mojibake 'Ã©'."""
+    import pyarrow.parquet as pq
+
+    from cartodb_importer_spark.infer import sniff_encoding
+
+    head = b"id,word\n1,"
+    filler = b"a" * ((1 << 20) - len(head) - 1)
+    p = tmp_path / "cut.csv"
+    p.write_bytes(head + filler + "é".encode() + b"\n2,plain\n")
+    assert os.path.getsize(p) == 1_048_586
+    assert sniff_encoding(str(p)) == "utf-8"
+    res = Importer(spark, catalog, str(p)).run()
+    table = pq.read_table(os.path.join(catalog.warehouse, res.name))
+    words = dict(zip(table.column("id").to_pylist(), table.column("word").to_pylist()))
+    assert words[1].endswith("aé")
+    assert words[2] == "plain"
+
+
+def test_routed_columns_are_sanitize_fixed_points(spark, tmp_path):
+    """Every reader route() dispatches to returns O10-sanitized column
+    names, so the Importer renames nothing: each format's columns, built
+    from headers that need sanitizing, are fixed points of
+    naming.sanitize_columns."""
+    import json
+    import struct
+
+    import numpy as np
+
+    from cartodb_importer_spark import naming
+    from cartodb_importer_spark.readers.dbf import write_dbf
+    from cartodb_importer_spark.readers.router import route
+    from cartodb_importer_spark.readers.tiff import encode_tiff_gray
+
+    raw = ["My Col", "xmin", "A", "a", "", "1st"]
+    files = {}
+    files["csv"] = _write(tmp_path, "t.csv", ",".join(raw) + "\nx,1,2,3,4,5\n")
+    files["jsonl"] = _write(
+        tmp_path, "t.jsonl", json.dumps({"My Col": "x", "xmin": 1, "1st": 2}) + "\n"
+    )
+    files["geojson"] = _write(tmp_path, "t.geojson", json.dumps({
+        "type": "FeatureCollection",
+        "features": [{
+            "type": "Feature",
+            "properties": {"My Col": "x", "xmin": 1, "the geom": "y"},
+            "geometry": {"type": "Point", "coordinates": [1.0, 2.0]},
+        }],
+    }))
+    files["kml"] = _write(tmp_path, "t.kml", (
+        '<kml xmlns="http://www.opengis.net/kml/2.2"><Document><Placemark>'
+        '<name>p</name><ExtendedData><Data name="Pop Count"><value>1</value>'
+        '</Data><Data name="xmin"><value>2</value></Data></ExtendedData>'
+        "<Point><coordinates>1,2</coordinates></Point></Placemark></Document></kml>"
+    ))
+    files["gpx"] = _write(tmp_path, "t.gpx", (
+        '<gpx xmlns="http://www.topografix.com/GPX/1/1"><trk><trkseg>'
+        '<trkpt lat="1" lon="2"><ele>3</ele></trkpt></trkseg></trk></gpx>'
+    ))
+    sheet = "".join(
+        f'<c r="{chr(65 + i)}1" t="inlineStr"><is><t>{n}</t></is></c>'
+        for i, n in enumerate(raw)
+    )
+    xlsx = tmp_path / "t.xlsx"
+    with zipfile.ZipFile(xlsx, "w") as zf:
+        zf.writestr(
+            "xl/worksheets/sheet1.xml",
+            '<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/'
+            f'2006/main"><sheetData><row r="1">{sheet}</row><row r="2">'
+            '<c r="A2"><v>1</v></c></row></sheetData></worksheet>',
+        )
+    files["xlsx"] = str(xlsx)
+    shp_dir = tmp_path / "shp"
+    shp_dir.mkdir()
+    with open(shp_dir / "pts.shp", "wb") as f:
+        f.write(struct.pack(">7i", 9994, 0, 0, 0, 0, 0, (100 + 28) // 2))
+        f.write(struct.pack("<2i8d", 1000, 1, 1, 2, 1, 2, 0, 0, 0, 0))
+        f.write(struct.pack(">2i", 1, 10) + struct.pack("<i2d", 1, 1.0, 2.0))
+    with open(shp_dir / "pts.dbf", "wb") as f:
+        write_dbf(
+            f, ["Pop Count", "XMIN", "order"], [("C", 8, 0)] * 3, [["a", "b", "c"]]
+        )
+    shp_zip = tmp_path / "pts.zip"
+    with zipfile.ZipFile(shp_zip, "w") as zf:
+        for ext in (".shp", ".dbf"):
+            zf.write(shp_dir / f"pts{ext}", f"pts{ext}")
+    files["shp zip"] = str(shp_zip)
+    tif = tmp_path / "t.tif"
+    tif.write_bytes(encode_tiff_gray(np.zeros((2, 2), dtype=np.uint8)))
+    files["tif"] = str(tif)
+
+    for fmt, path in files.items():
+        workdir = tmp_path / f"work_{fmt}"
+        workdir.mkdir()
+        df, _ = route(spark, path, str(workdir))
+        assert naming.sanitize_columns(df.columns) == df.columns, fmt
+        assert len(df.columns) > 1, fmt

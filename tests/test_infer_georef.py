@@ -1,5 +1,5 @@
 """Reference-fidelity tests for §2.2 type inference, georeferencing guard
-regexes, the as-of join, and the raster reader stub."""
+regexes, the as-of join, and the raster reader."""
 
 from pyspark.sql import functions as F
 
@@ -174,19 +174,48 @@ def test_asof_join_tolerance(spark):
     assert got_f == {1: 1000, 2: None, 3: 600, 4: None}
 
 
-def test_raster_stub_tiling(spark, tmp_path):
-    from cartodb_importer_spark.readers.raster import (
-        raster_tile_stats, read_raster,
-    )
+def test_undecodable_raster_import_raises_and_leaves_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """A .tif the decoder cannot read fails the import with a ValueError
+    naming the file: no table, no staging table, no import workdir."""
+    import os
+    import tempfile
 
+    import pytest
+
+    from cartodb_importer_spark.importer import Importer
+    from cartodb_importer_spark.sinks.catalog import LocalCatalog
+
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
     p = tmp_path / "fake.tif"
-    p.write_bytes(b"x" * (180 * 180 * 2 + 100))  # 2 full tiles + remainder
-    df, meta = read_raster(spark, str(p))
-    assert meta["decoder"] == "stub"
-    assert df.count() == 3
-    stats = raster_tile_stats(df).collect()
-    sizes = sorted(r["block_bytes"] for r in stats)
-    assert sizes == [100, 32400, 32400]
+    p.write_bytes(b"x" * (180 * 180 * 2 + 100))  # not a TIFF
+    catalog = LocalCatalog(str(tmp_path / "wh"))
+    with pytest.raises(ValueError, match="fake.tif.*not a TIFF"):
+        Importer(spark, catalog, str(p)).run()
+    assert catalog.table_names() == []
+    assert os.listdir(catalog.warehouse) == []
+    assert [d for d in os.listdir(scratch) if d.startswith("cartodb_import_")] == []
+
+
+def test_truncated_geotiff_raises_value_error(spark, tmp_path):
+    """A decode that runs past the end of a cut file is a ValueError
+    naming the file too, whatever the decoder raised inside."""
+    import numpy as np
+    import pytest
+
+    from cartodb_importer_spark.readers.raster import read_raster
+    from cartodb_importer_spark.readers.tiff import encode_tiff_gray
+
+    band = (np.arange(200 * 190, dtype=np.uint16) % 999).reshape(200, 190)
+    data = encode_tiff_gray(band, srid=4326, compression="deflate")
+    for cut in (8, 200, len(data) // 2):
+        p = tmp_path / f"cut{cut}.tif"
+        p.write_bytes(data[:cut])
+        with pytest.raises(ValueError, match=f"cut{cut}.tif"):
+            read_raster(spark, str(p))
 
 
 def test_grid_cell_partition_pruning(spark, tmp_path):
@@ -266,7 +295,6 @@ def test_raster_real_geotiff_tiling(spark, tmp_path):
     p = tmp_path / "elev.tif"
     p.write_bytes(encode_tiff_gray(band, srid=4326))
     df, meta = read_raster(spark, str(p))
-    assert meta["decoder"] == "pytiff"
     assert (meta["width"], meta["height"]) == (w, h)
     tiles = {(r["tile_x"], r["tile_y"]): r for r in df.collect()}
     assert len(tiles) == 9
@@ -311,8 +339,7 @@ def test_tiff_compressed_roundtrips():
 
 
 def test_raster_compressed_geotiff_real_path(spark, tmp_path):
-    """A deflate-compressed GeoTIFF now goes through the REAL pytiff path
-    (not the stub)."""
+    """A deflate-compressed GeoTIFF decodes to real pixel blocks."""
     import numpy as np
 
     from cartodb_importer_spark.readers.raster import read_raster
@@ -322,7 +349,7 @@ def test_raster_compressed_geotiff_real_path(spark, tmp_path):
     p = tmp_path / "zelev.tif"
     p.write_bytes(encode_tiff_gray(band, srid=4326, compression="deflate", predictor=2))
     df, meta = read_raster(spark, str(p))
-    assert meta["decoder"] == "pytiff"
+    assert meta["rows"] == 4
     tiles = {(r["tile_x"], r["tile_y"]): r for r in df.collect()}
     assert len(tiles) == 4  # 2x2 grid (200x190 at 180 tiling)
     got = np.frombuffer(bytes(tiles[(0, 0)]["block"]), dtype=np.uint16).reshape(180, 180)
@@ -358,9 +385,8 @@ def test_tiff_tiled_roundtrips():
 
 
 def test_raster_tiled_geotiff_real_path(spark, tmp_path):
-    """A deflate-compressed TILED GeoTIFF goes through the REAL pytiff
-    path: correct 180x180 blocking of actual pixels, not the byte stub
-    (VERDICT r3 missing-item 3)."""
+    """A deflate-compressed TILED GeoTIFF decodes to correct 180x180
+    blocks of actual pixels (VERDICT r3 missing-item 3)."""
     import numpy as np
 
     from cartodb_importer_spark.readers.raster import read_raster
@@ -375,7 +401,6 @@ def test_raster_tiled_geotiff_real_path(spark, tmp_path):
                                srid=4326)
     )
     df, meta = read_raster(spark, str(p))
-    assert meta["decoder"] == "pytiff"
     assert meta["width"] == 190 and meta["height"] == 200
     rows = {(r["tile_x"], r["tile_y"]): r for r in df.collect()}
     assert len(rows) == 4  # ceil(190/180) x ceil(200/180)

@@ -156,12 +156,6 @@ def _write_point_shp(path, points):
 
 
 def test_shp_reader_reprojects_utm_without_pyproj(spark, tmp_path):
-    try:
-        import pyproj  # noqa: F401
-
-        pytest.skip("pyproj installed; this test covers the fallback path")
-    except ImportError:
-        pass
     shp = tmp_path / "utmpts.shp"
     # (500000, 0) = central meridian on the equator -> exactly (3 E, 0 N)
     _write_point_shp(str(shp), [(500000.0, 0.0), (630084.3008, 4833438.5857)])

@@ -630,6 +630,26 @@ def test_continuous_csv_import_headerless_bom(spark, tmp_path):
     assert dict(got.dtypes)["field_1"] == "int"
 
 
+def test_plan_csv_ingest_leaves_no_staged_copy(spark, tmp_path, monkeypatch):
+    """Planning a CR-only landing zone stages a newline-normalized copy of
+    the seed file to read its header; the copy is gone once the plan
+    returns."""
+    import os
+    import tempfile
+
+    from cartodb_importer_spark.streaming.ingest import plan_csv_ingest
+
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    land = tmp_path / "landing"
+    land.mkdir()
+    (land / "mac.csv").write_bytes(b"id,name\r1,a\r2,b\r")
+    schema, _, _ = plan_csv_ingest(spark, str(land))
+    assert schema.names == ["id", "name"]
+    assert [d for d in os.listdir(scratch) if d.startswith("cartodb_csv_")] == []
+
+
 def test_replace_batch_idempotent_and_o_batch(spark, tmp_path):
     """replace_batch contract (streaming/sinks.py exactly-once building
     block): replaying a batch_id replaces exactly its own rows; other
