@@ -70,13 +70,14 @@ class _BitReader:
         #: SOS/DHT legitimately terminates this scan's segment and the
         #: reader must drain past it with zero padding.
         self.strict = strict
+        #: zero bytes padded since the scan (or restart interval) began
+        self.padded = 0
 
     def _fill(self) -> None:
         d = self.data
         while self.nbits <= 24:
             if self.pos >= len(d):
-                self.acc = (self.acc << 8) | 0  # pad: trailing EOB garbage
-                self.nbits += 8
+                self._pad()  # trailing EOB garbage
                 continue
             b = d[self.pos]
             if b == 0xFF:
@@ -100,13 +101,24 @@ class _BitReader:
                     # segment-ending marker (RSTn, EOI — or, non-strict,
                     # the next scan's SOS/DHT): stop feeding real bits
                     # and pad with zeros
-                    self.acc = (self.acc << 8) | 0
-                    self.nbits += 8
+                    self._pad()
                     continue
             else:
                 self.pos += 1
             self.acc = (self.acc << 8) | b
             self.nbits += 8
+
+    #: a complete scan needs at most one fill (4 bytes) of padding past
+    #: its data; a strict reader that pads more is decoding blocks the
+    #: data does not hold — a header claiming more rows than were coded
+    MAX_PAD = 16
+
+    def _pad(self) -> None:
+        self.padded += 1
+        if self.strict and self.padded > self.MAX_PAD:
+            raise ValueError("scan data ends before the frame's last block")
+        self.acc <<= 8
+        self.nbits += 8
 
     def bit(self) -> int:
         if self.nbits == 0:
@@ -124,6 +136,7 @@ class _BitReader:
         """Consume an RSTn marker between restart intervals."""
         self.acc = 0
         self.nbits = 0
+        self.padded = 0
         d = self.data
         while self.pos + 1 < len(d):
             if d[self.pos] == 0xFF and 0xD0 <= d[self.pos + 1] <= 0xD7:
@@ -276,6 +289,9 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
     # 65535x65535 would loop over ~67M MCUs of garbage before failing
     if not (0 < height * width <= 1 << 26):
         raise ValueError(f"JPEG dimensions {width}x{height} exceed decode ceiling")
+    # every 8x8 block of the largest component costs at least one bit
+    if ((height + 7) // 8) * ((width + 7) // 8) > 8 * len(d):
+        raise ValueError(f"JPEG dimensions {width}x{height} exceed what its data can code")
     if progressive:
         if len(comps) not in (1, 3):
             raise ValueError("CMYK/multi-spectral JPEG unsupported")

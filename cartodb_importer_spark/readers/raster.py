@@ -24,6 +24,14 @@ _TILE_COLUMNS = ("rid", "tile_x", "tile_y", "width", "height", "srid", "block")
 _TILE_TYPES = {**dict.fromkeys(_TILE_COLUMNS[:-1], pa.int32()), "block": pa.binary()}
 
 
+#: what decode_tiff raises on a file it cannot decode: its own refusals are
+#: ValueErrors; a truncated or corrupt file fails wherever a read or a
+#: lookup runs off its data. read_raster turns each into a ValueError.
+DECODE_ERRORS = (
+    ValueError, TypeError, IndexError, KeyError, OverflowError, struct.error, zlib.error,
+)
+
+
 def read_raster(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
     """Window band 1 into TILE x TILE blocks, the blocking raster2pgsql
     -k 180x180 performs: one row per block with rid, tile_x, tile_y,
@@ -32,12 +40,7 @@ def read_raster(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
         data = f.read()
     try:
         band, meta = decode_tiff(data)
-    except (
-        ValueError, TypeError, IndexError, KeyError, OverflowError,
-        struct.error, zlib.error,
-    ) as exc:
-        # the decoder's own refusals are ValueErrors; a truncated or
-        # corrupt file fails wherever a read or a lookup runs off its data
+    except DECODE_ERRORS as exc:
         raise ValueError(f"cannot decode raster {path}: {exc}") from exc
     srid = meta["srid"] or 4326
     height, width = band.shape

@@ -520,6 +520,46 @@ def _undo_float_predictor(
     return floats.astype(np.dtype(f"{bo}f{itemsize}"))
 
 
+#: most bytes one byte of strip/tile data decodes to, per compression:
+#: PackBits 2 -> 128, deflate's 1032:1, an LZW code of 9+ bits -> at most
+#: 4096 bytes, a JPEG bit -> at most one 8x8 block of RGB (8 * 64 * 3).
+#: CCITT (at least one bit per row) is width-dependent: see the check.
+_MAX_EXPANSION = {1: 1, 32773: 64, 8: 1032, 32946: 1032, 5: 4096, 6: 1536, 7: 1536}
+
+
+def _check_pixel_budget(data: bytes, t: dict, compression: int, width: int,
+                        height: int, spp: int, dt) -> None:
+    """Refuse, before anything is allocated, a header whose pixel buffer
+    cannot come from its strip/tile bytes at the compression's maximum
+    expansion: a few-KB corrupt header must not claim gigabytes."""
+    if 322 in t or 324 in t:
+        tw, th = int(t.get(322, [0])[0]), int(t.get(323, [0])[0])
+        if tw <= 0 or th <= 0:
+            raise ValueError("tiled TIFF missing tile tags")
+        width, height = -(-width // tw) * tw, -(-height // th) * th
+        offsets, counts = t.get(324), t.get(325)
+    elif compression == 6:
+        offsets, counts = t.get(513), t.get(514)
+    else:
+        offsets, counts = t.get(273), t.get(279)
+    if offsets is None or counts is None:
+        avail = len(data)
+    else:
+        avail = sum(max(0, min(int(c), len(data) - int(o))) for o, c in zip(offsets, counts))
+    if compression in (2, 3, 4):
+        need, per_byte = width * height, 8 * width
+    elif compression in (6, 7):
+        need, per_byte = width * height * 3, _MAX_EXPANSION[compression]
+    else:
+        need = width * height * spp * dt.itemsize
+        per_byte = _MAX_EXPANSION.get(compression, _MAX_EXPANSION[5])
+    if need > avail * per_byte:
+        raise ValueError(
+            f"TIFF header asks for {need} pixel bytes; its {avail} data "
+            f"bytes decode to at most {avail * per_byte}"
+        )
+
+
 def decode_tiff(data: bytes, _full: bool = False) -> tuple[np.ndarray, dict]:
     """Strip- OR tile-organized TIFF -> (band-1 2D array, georef metadata).
 
@@ -552,6 +592,7 @@ def decode_tiff(data: bytes, _full: bool = False) -> tuple[np.ndarray, dict]:
         )
     if predictor == 3 and (dt is None or dt.kind != "f"):
         raise ValueError("predictor 3 requires float samples")
+    _check_pixel_budget(data, t, compression, width, height, spp, dt)
 
     band1 = None
     if compression in (2, 3, 4):

@@ -5,13 +5,22 @@ AQE on (runtime partition coalescing + skew-join splitting), Arrow on (fast
 pandas transfer), UTC session timezone (timestamp hashes must match the
 oracle), shuffle partitions sized to the local core count (on a real cluster
 this is overridden to ~2-3x total cores; AQE coalesces down after the fact).
+
+A start that launches the JVM maps a class-data-sharing archive of the
+classes a session loads (``_ClassArchive``), which halves the cold start.
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import hashlib
 import os
+import shutil
+import subprocess
 import tempfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -108,7 +117,20 @@ def get_spark(
             builder = builder.config(k.strip(), v.strip())
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    archive = None
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        archive = _ClassArchive.prepare()
+    if archive is None:
+        spark = builder.getOrCreate()
+    else:
+        # defaultJavaOptions, because a caller's extraJavaOptions replaces
+        # rather than merges; a caller's own defaultJavaOptions is kept
+        key = "spark.driver.defaultJavaOptions"
+        caller = (extra_conf or {}).get(key, requested.get(key, ""))
+        builder = builder.config(key, f"{archive.java_options} {caller}".strip())
+        with archive.conf_dir():
+            spark = builder.getOrCreate()
+        archive.launched(spark)
     # builder.config is a no-op when a SparkSession already exists in the
     # process, so explicitly-requested env knobs (e.g. the zstd spill codec
     # a SCALE rehearsal depends on) can be silently dropped — surface that
@@ -128,3 +150,151 @@ def get_spark(
                 stacklevel=2,
             )
     return spark
+
+
+class _ClassArchive:
+    """A dynamic class-data-sharing archive of the classes a session loads.
+
+    The first start that finds no archive has the driver JVM write one at
+    exit (``-XX:ArchiveClassesAtExit``) to a pid-unique temp file; every
+    later start maps it (``-XX:SharedArchiveFile``). The archive lives in
+    ``$XDG_CACHE_HOME/cartodb_importer_spark`` (default ``~/.cache``), keyed
+    by the java binary and the ``$SPARK_HOME/jars`` listing. A JVM that maps
+    a truncated archive dies of SIGBUS, so the temp file is published only
+    after the JVM exited with 0 and a throwaway JVM mapped it with
+    verification on, under a name holding its validated size; a file whose
+    size no longer matches its name is not mapped. CDS refuses a non-empty
+    directory on the class path, so the JVM is pointed at an empty conf dir;
+    a conf dir holding anything but Spark's ``*.template`` files means no
+    archive, so that its config still applies.
+    """
+
+    # the dump prints ~1,000 [warning][cds] lines on the caller's stdout
+    QUIET = "-Xlog:cds*=off"
+
+    def __init__(self, cache: str, key: str, java: str, published: str | None):
+        self.cache, self.key, self.java, self.published = cache, key, java, published
+        self.temp = os.path.join(cache, f"{key}.{os.getpid()}.tmp")
+        if published:
+            self.java_options = f"-XX:SharedArchiveFile={published} {self.QUIET}"
+        else:
+            self.java_options = f"-XX:ArchiveClassesAtExit={self.temp} {self.QUIET}"
+
+    @classmethod
+    def prepare(cls) -> "_ClassArchive | None":
+        from pyspark.find_spark_home import _find_spark_home
+
+        spark_home = _find_spark_home()
+        conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+        try:
+            if any(not n.endswith(".template") for n in os.listdir(conf)):
+                return None
+        except FileNotFoundError:
+            pass
+        java_home = os.environ.get("JAVA_HOME")
+        java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+        cache = os.path.join(
+            os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
+            "cartodb_importer_spark",
+        )
+        try:
+            java = os.path.realpath(java)
+            digest = hashlib.sha256(java.encode())
+            jars = os.path.join(spark_home, "jars")
+            for name in sorted(os.listdir(jars)):
+                st = os.stat(os.path.join(jars, name))
+                digest.update(f"\0{name}\0{st.st_size}\0{st.st_mtime_ns}".encode())
+            os.makedirs(os.path.join(cache, "conf"), exist_ok=True)
+            if not os.access(cache, os.W_OK) or os.listdir(os.path.join(cache, "conf")):
+                return None
+            names = os.listdir(cache)
+        except (OSError, TypeError):
+            return None
+        key = digest.hexdigest()[:16]
+        published = None
+        for name in names:
+            stem, _, size = name.removesuffix(".jsa").partition("-")
+            path = os.path.join(cache, name)
+            if name.endswith(".jsa") and stem == key and size.isdigit():
+                with contextlib.suppress(OSError):
+                    if os.path.getsize(path) == int(size):
+                        published = path
+                        break
+        return cls(cache, key, java, published)
+
+    @contextlib.contextmanager
+    def conf_dir(self):
+        """Point the launched JVM at the engine's empty conf dir."""
+        before = os.environ.get("SPARK_CONF_DIR")
+        os.environ["SPARK_CONF_DIR"] = os.path.join(self.cache, "conf")
+        try:
+            yield
+        finally:
+            if before is None:
+                del os.environ["SPARK_CONF_DIR"]
+            else:
+                os.environ["SPARK_CONF_DIR"] = before
+
+    def launched(self, spark: SparkSession) -> None:
+        """Register the exit hook that stops the JVM this start launched and,
+        for a creating start, publishes the archive it wrote."""
+        proc = getattr(spark.sparkContext._gateway, "proc", None)
+        if proc is None:
+            return
+        class_path = None
+        if self.published is None:
+            class_path = spark.sparkContext._jvm.System.getProperty("java.class.path")
+        atexit.register(self._exit, proc, class_path)
+
+    def _exit(self, proc: subprocess.Popen, class_path: str | None) -> None:
+        # the JVM exits on EOF on its stdin; a creating JVM then spends
+        # seconds writing the archive, and must not outlive the interpreter
+        with contextlib.suppress(OSError):
+            proc.stdin.close()
+        try:
+            code = proc.wait(timeout=300)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            code = proc.wait()
+        if class_path is not None:
+            try:
+                if code == 0:
+                    self._publish(class_path)
+            finally:
+                with contextlib.suppress(OSError):
+                    os.remove(self.temp)
+
+    def _publish(self, class_path: str) -> None:
+        if not os.path.isfile(self.temp):
+            return
+        check = subprocess.run(
+            [self.java, "-Xshare:on", "-XX:+VerifySharedSpaces",
+             f"-XX:SharedArchiveFile={self.temp}", "-XX:-CreateCoredumpOnCrash",
+             f"-XX:ErrorFile={self.temp}.err", "-cp", class_path, "-version"],
+            stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL, cwd=self.cache,
+        )
+        with contextlib.suppress(OSError):
+            os.remove(f"{self.temp}.err")
+        if check.returncode != 0:
+            return
+        final = os.path.join(self.cache, f"{self.key}-{os.path.getsize(self.temp)}.jsa")
+        os.replace(self.temp, final)
+        # drop older archives (a JVM that maps one keeps its pages) and the
+        # temp files of starts whose process is gone
+        for name in os.listdir(self.cache):
+            pid = name.split(".")[1] if name.count(".") == 2 else ""
+            if (name.endswith(".jsa") and name != os.path.basename(final)) or (
+                name.endswith(".tmp") and pid.isdigit() and not _running(int(pid))
+            ):
+                with contextlib.suppress(OSError):
+                    os.remove(os.path.join(self.cache, name))
+
+
+def _running(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True

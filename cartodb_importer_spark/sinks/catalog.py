@@ -16,13 +16,56 @@ Two implementations:
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import time
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+
+#: footer key under which Spark stores the row schema of a parquet file
+_SPARK_ROW_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """Schema ``spark.read.parquet(path)`` infers, taken from the first part
+    file's footer on the driver instead of by a Spark job; None when the
+    table dir is partitioned or has no Spark-written part file. Every field
+    is nullable, as in Spark's own read."""
+    try:
+        names = [n for n in sorted(os.listdir(path)) if not n.startswith(("_", "."))]
+    except OSError:
+        return None
+    if any(os.path.isdir(os.path.join(path, n)) for n in names):
+        return None
+    for name in names:
+        if name.endswith(".parquet"):
+            meta = pq.read_schema(os.path.join(path, name)).metadata or {}
+            if _SPARK_ROW_SCHEMA not in meta:
+                return None
+            return StructType.fromJson(_nullable(json.loads(meta[_SPARK_ROW_SCHEMA])))
+    return None
+
+
+def _nullable(t):
+    """A schema JSON with every field, array element and map value nullable."""
+    if not isinstance(t, dict):
+        return t
+    kind = t.get("type")
+    if kind == "struct":
+        return {**t, "fields": [{**f, "nullable": True, "type": _nullable(f["type"])}
+                                for f in t["fields"]]}
+    if kind == "array":
+        return {**t, "containsNull": True, "elementType": _nullable(t["elementType"])}
+    if kind == "map":
+        return {**t, "valueContainsNull": True, "keyType": _nullable(t["keyType"]),
+                "valueType": _nullable(t["valueType"])}
+    return t
 
 
 class Catalog:
@@ -318,7 +361,9 @@ class LocalCatalog(Catalog):
         no-``_base`` window still reads every folded row (ADVICE r10)."""
         base = cls._effective_base(path)
         if base is None:
-            return spark.read.parquet(path)
+            schema = _footer_schema(path)
+            reader = spark.read if schema is None else spark.read.schema(schema)
+            return reader.parquet(path)
         bdf = spark.read.parquet(base)
         # the marker comes from the SAME resolved dir the read serves —
         # re-resolving via _marker_at(path) would double the listing work

@@ -12,12 +12,15 @@ under the driver-side row cap, with one job.
 from __future__ import annotations
 
 import json
+import os
 import uuid
 import zipfile
 
+import numpy as np
 import pytest
 
-from cartodb_importer_spark.importer import Importer
+from cartodb_importer_spark.importer import Exporter, Importer
+from cartodb_importer_spark.readers.tiff import encode_tiff_gray
 from cartodb_importer_spark.sinks import files as fsinks
 from cartodb_importer_spark.sinks.catalog import LocalCatalog
 
@@ -135,3 +138,43 @@ def test_driver_side_export_runs_one_job(spark, catalog, tmp_path, export):
     assert _jobs(spark, lambda: out.append(export(table, "pts", str(tmp_path)))) == 1
     with zipfile.ZipFile(out[0]) as zf:
         assert len(zf.namelist()) >= 1
+
+
+def _write(spark, path):
+    """A small file of the format ``path``'s suffix names."""
+    {
+        ".csv": lambda p: _csv(p, 20),
+        ".xlsx": _make_xlsx,
+        ".zip": lambda p: _shp_zip(spark, p),
+        ".kml": _kml,
+        ".gpx": _gpx,
+        ".geojson": _geojson,
+        ".jsonl": lambda p: p.write_text(
+            '{"a": 1, "b": "x", "c": [1, 2], "d": {"e": 0.5}}\n{"a": 2, "c": []}\n'),
+        ".orc": lambda p: spark.createDataFrame(
+            [(1, "x", [1.5])], "id int, name string, v array<double>").write.orc(str(p)),
+        ".tif": lambda p: p.write_bytes(encode_tiff_gray(
+            np.arange(12, dtype=np.uint8).reshape(3, 4), srid=4326)),
+    }[path.suffix](path)
+
+
+@pytest.mark.parametrize("name", [
+    "t.csv", "t.xlsx", "t.zip", "t.kml", "t.gpx", "t.geojson", "t.jsonl", "t.orc", "t.tif"])
+def test_catalog_read_schema_is_what_spark_infers(spark, catalog, tmp_path, name):
+    path = tmp_path / name
+    _write(spark, path)
+    table = Importer(spark, catalog, str(path)).run().name
+    read = []
+    assert _jobs(spark, lambda: read.append(catalog.read(spark, table))) == 0
+    assert read[0].schema == spark.read.parquet(catalog._path(table)).schema
+
+
+def test_csv_export_runs_one_job(spark, catalog, tmp_path):
+    path = tmp_path / "t.csv"
+    _csv(path, 50)
+    table = Importer(spark, catalog, str(path)).run().name
+    out = []
+    exporter = Exporter(spark, catalog, table, "csv", str(tmp_path / "out"))
+    assert _jobs(spark, lambda: out.append(exporter.run())) == 1
+    with zipfile.ZipFile(out[0].path) as zf:
+        assert len(zf.read(f"{table}.csv").decode().splitlines()) == 51

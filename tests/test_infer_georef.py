@@ -1,6 +1,8 @@
 """Reference-fidelity tests for §2.2 type inference, georeferencing guard
 regexes, the as-of join, and the raster reader."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from cartodb_importer_spark.georef import LAT_RX, LON_RX, find_latlon_columns
@@ -10,6 +12,8 @@ from cartodb_importer_spark.infer import (
     sniff_delimiter,
 )
 from cartodb_importer_spark.operators.asof import asof_join
+
+DATA = os.path.join(os.path.dirname(__file__), "data")
 
 
 def test_lattice_promotion(spark):
@@ -216,6 +220,73 @@ def test_truncated_geotiff_raises_value_error(spark, tmp_path):
         p.write_bytes(data[:cut])
         with pytest.raises(ValueError, match=f"cut{cut}.tif"):
             read_raster(spark, str(p))
+
+
+def test_jpeg_in_tiff_with_a_corrupt_height_fails_fast(spark, tmp_path):
+    """A JPEG-in-TIFF strip whose SOF claims more rows than its scan codes
+    raises a ValueError naming the file within 2 s, whether the claim is
+    larger than any scan of that size could code (59,954 rows) or only
+    larger than this one's (2,000 rows: the bit reader runs dry)."""
+    import struct
+    import time
+
+    import pytest
+
+    from cartodb_importer_spark.readers.raster import read_raster
+
+    data = bytearray(open(os.path.join(DATA, "jpeg_gray.tif"), "rb").read())
+    sof = data.index(b"\xff\xc0")
+    assert struct.unpack(">H", data[sof + 5 : sof + 7]) == (50,)
+    for rows in (59954, 2000):
+        data[sof + 5 : sof + 7] = struct.pack(">H", rows)
+        p = tmp_path / f"rows{rows}.tif"
+        p.write_bytes(bytes(data))
+        t0 = time.perf_counter()
+        with pytest.raises(ValueError, match=f"rows{rows}.tif"):
+            read_raster(spark, str(p))
+        assert time.perf_counter() - t0 < 2
+
+
+FUZZ = """
+import random, resource, sys
+import numpy as np
+from cartodb_importer_spark.readers import tiff
+from cartodb_importer_spark.readers.raster import DECODE_ERRORS
+resource.setrlimit(resource.RLIMIT_AS, (2 << 30, 2 << 30))
+band = (np.arange(40 * 30).reshape(40, 30) % 251).astype(np.uint8)
+fixtures = [tiff.encode_bigtiff_gray(band, srid=25830)]
+for c in (None, "deflate", "packbits", "lzw"):
+    fixtures.append(tiff.encode_tiff_gray(band, srid=4326, compression=c))
+    fixtures.append(tiff.encode_tiff_gray_tiled(band, tile=(16, 16), compression=c))
+fixtures += [open(p, "rb").read() for p in sys.argv[1:]]
+rng = random.Random(20261020)
+for i in range(4000):
+    d = bytearray(fixtures[i % len(fixtures)])
+    for _ in range(rng.randint(1, 4)):
+        d[rng.randrange(len(d))] = rng.randrange(256)
+    try:
+        tiff.decode_tiff(bytes(d))
+    except DECODE_ERRORS:
+        pass
+print("ok")
+"""
+
+
+def test_byte_flipped_tiffs_fail_with_value_errors_in_bounded_memory():
+    """Seeded byte flips of every TIFF fixture, decoded under a 2 GB
+    address-space limit: each decodes or raises what read_raster reports
+    as a ValueError (never MemoryError), and the whole fuzz takes < 60 s."""
+    import glob
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tifs = sorted(glob.glob(os.path.join(DATA, "*.tif*")))
+    assert len(tifs) >= 5
+    env = {**os.environ, "OPENBLAS_NUM_THREADS": "1", "OMP_NUM_THREADS": "1"}
+    proc = subprocess.run([sys.executable, "-c", FUZZ, *tifs], cwd=root, env=env,
+                          capture_output=True, text=True, timeout=60)
+    assert proc.returncode == 0 and proc.stdout.strip() == "ok", proc.stderr[-2000:]
 
 
 def test_grid_cell_partition_pruning(spark, tmp_path):
