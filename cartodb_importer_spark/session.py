@@ -190,9 +190,13 @@ class _ClassArchive:
             if any(not n.endswith(".template") for n in os.listdir(conf)):
                 return None
         except FileNotFoundError:
-            pass
+            pass  # nothing of the caller's to keep on the class path
+        except OSError:
+            return None
         java_home = os.environ.get("JAVA_HOME")
         java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+        if java is None:
+            return None
         cache = os.path.join(
             os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
             "cartodb_importer_spark",
@@ -208,7 +212,7 @@ class _ClassArchive:
             if not os.access(cache, os.W_OK) or os.listdir(os.path.join(cache, "conf")):
                 return None
             names = os.listdir(cache)
-        except (OSError, TypeError):
+        except OSError:
             return None
         key = digest.hexdigest()[:16]
         published = None
@@ -257,9 +261,12 @@ class _ClassArchive:
             proc.kill()
             code = proc.wait()
         if class_path is not None:
+            # an archive that cannot be checked or published is not used
             try:
                 if code == 0:
                     self._publish(class_path)
+            except (OSError, subprocess.SubprocessError):
+                pass
             finally:
                 with contextlib.suppress(OSError):
                     os.remove(self.temp)
@@ -272,6 +279,7 @@ class _ClassArchive:
              f"-XX:SharedArchiveFile={self.temp}", "-XX:-CreateCoredumpOnCrash",
              f"-XX:ErrorFile={self.temp}.err", "-cp", class_path, "-version"],
             stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL, cwd=self.cache,
+            timeout=120,
         )
         with contextlib.suppress(OSError):
             os.remove(f"{self.temp}.err")

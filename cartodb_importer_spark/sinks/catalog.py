@@ -22,6 +22,7 @@ import shutil
 import time
 import uuid
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,37 +36,19 @@ _SPARK_ROW_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
 def _footer_schema(path: str) -> StructType | None:
     """Schema ``spark.read.parquet(path)`` infers, taken from the first part
     file's footer on the driver instead of by a Spark job; None when the
-    table dir is partitioned or has no Spark-written part file. Every field
-    is nullable, as in Spark's own read."""
+    table dir is partitioned or holds no readable Spark-written part file.
+    Spark's read makes a given schema nullable, as it does an inferred one."""
     try:
         names = [n for n in sorted(os.listdir(path)) if not n.startswith(("_", "."))]
-    except OSError:
+        if any(os.path.isdir(os.path.join(path, n)) for n in names):
+            return None
+        part = next((n for n in names if n.endswith(".parquet")), None)
+        meta = pq.read_schema(os.path.join(path, part)).metadata if part else None
+    except (OSError, pa.ArrowInvalid):
+        return None  # Spark's own read reports what is wrong
+    if not meta or _SPARK_ROW_SCHEMA not in meta:
         return None
-    if any(os.path.isdir(os.path.join(path, n)) for n in names):
-        return None
-    for name in names:
-        if name.endswith(".parquet"):
-            meta = pq.read_schema(os.path.join(path, name)).metadata or {}
-            if _SPARK_ROW_SCHEMA not in meta:
-                return None
-            return StructType.fromJson(_nullable(json.loads(meta[_SPARK_ROW_SCHEMA])))
-    return None
-
-
-def _nullable(t):
-    """A schema JSON with every field, array element and map value nullable."""
-    if not isinstance(t, dict):
-        return t
-    kind = t.get("type")
-    if kind == "struct":
-        return {**t, "fields": [{**f, "nullable": True, "type": _nullable(f["type"])}
-                                for f in t["fields"]]}
-    if kind == "array":
-        return {**t, "containsNull": True, "elementType": _nullable(t["elementType"])}
-    if kind == "map":
-        return {**t, "valueContainsNull": True, "keyType": _nullable(t["keyType"]),
-                "valueType": _nullable(t["valueType"])}
-    return t
+    return StructType.fromJson(json.loads(meta[_SPARK_ROW_SCHEMA]))
 
 
 class Catalog:
