@@ -19,6 +19,8 @@ weaker rows-only check for those.
 
 from __future__ import annotations
 
+import os
+import stat
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,29 +60,30 @@ def query(name: str, oracle: str | None = None):
 
 
 class Tables:
-    """Lazy per-table parquet loader: ``t.lineitem`` reads
-    ``{sf_dir}/lineitem.parquet`` on first access."""
+    """Lazy per-table parquet loader: ``t.lineitem`` is
+    ``read_parquet_normalized(spark, f"{sf_dir}/lineitem.parquet")``, so
+    every ``Tables`` of a session shares that memo: while the table's files
+    are unchanged, each query gets the frame the first access built and
+    runs no schema-inference job."""
 
     def __init__(self, spark: SparkSession, sf_dir: str):
         self._spark = spark
         self._sf_dir = sf_dir
-        self._cache: dict[str, DataFrame] = {}
 
     def __getattr__(self, name: str) -> DataFrame:
         if name.startswith("_"):
             raise AttributeError(name)
         if name not in TABLES:
             raise AttributeError(f"unknown table {name!r}")
-        if name not in self._cache:
-            self._cache[name] = read_parquet_normalized(
-                self._spark, f"{self._sf_dir}/{name}.parquet"
-            )
-        return self._cache[name]
+        return read_parquet_normalized(self._spark, f"{self._sf_dir}/{name}.parquet")
 
 
-#: path -> frozenset of TIMESTAMP(NANOS) column names (footer sniff cache;
-#: the same files are read by every query in a sweep)
-_NS_COLS_CACHE: dict[str, frozenset[str]] = {}
+#: (session, path) -> (file version, raw scan, TIMESTAMP(NANOS) column
+#: names, normalized frame); an entry is replaced when its files change
+_MEMO: dict[
+    tuple[SparkSession, str],
+    tuple[tuple, DataFrame, frozenset[str], DataFrame],
+] = {}
 
 
 def _utc_epoch_ns(ts) -> int:
@@ -127,17 +130,17 @@ def read_parquet_ts_range(
     ISO-8601 strings (naive = UTC, matching the oracle's treatment of
     naive parquet timestamps) or datetimes. Results are identical to
     ``read_parquet_normalized(...).filter(...)`` — only the physical
-    plan differs."""
+    plan differs. The scan is the memoized one ``read_parquet_normalized``
+    returns."""
     from pyspark.sql import functions as F
 
-    ns_cols = _nanos_cols(path)
+    raw, ns_cols, df = _scan(spark, path)
     if ts_col in ns_cols:
-        lo_ns = None if lo is None else _utc_epoch_ns(lo)
-        hi_ns = None if hi is None else _utc_epoch_ns(hi)
-        return read_parquet_normalized(
-            spark, path, _raw_ns_range=(ts_col, lo_ns, hi_ns)
-        )
-    df = read_parquet_normalized(spark, path)
+        if lo is not None:
+            raw = raw.filter(F.col(ts_col) >= F.lit(_utc_epoch_ns(lo)))
+        if hi is not None:
+            raw = raw.filter(F.col(ts_col) < F.lit(_utc_epoch_ns(hi)))
+        return _normalize(raw, ns_cols)
     if lo is not None:
         df = df.filter(F.col(ts_col) >= F.lit(lo).cast("timestamp"))
     if hi is not None:
@@ -145,53 +148,50 @@ def read_parquet_ts_range(
     return df
 
 
-def _nanos_cols(path: str) -> frozenset[str]:
-    """TIMESTAMP(NANOS) column names from one parquet footer (cached —
-    the same files are read by every query in a sweep)."""
-    ns_cols = _NS_COLS_CACHE.get(path)
-    if ns_cols is None:
-        try:
-            import pyarrow.parquet as pq
-
-            import glob
-            import os
-
-            sample = path
-            if os.path.isdir(path):
-                sample = sorted(glob.glob(os.path.join(path, "*.parquet")))[0]
-            ns_cols = frozenset(
-                f.name
-                for f in pq.read_schema(sample)
-                if str(f.type) == "timestamp[ns]"
-            )
-        except Exception:
-            ns_cols = frozenset()
-        _NS_COLS_CACHE[path] = ns_cols
-    return ns_cols
+def _listed(name: str) -> bool:
+    """Whether Spark's file listing keeps a file or dir of this name: it
+    skips hidden (``.``) names and ``_`` names other than partition dirs."""
+    return not (name.startswith(".") or (name.startswith("_") and "=" not in name))
 
 
-def read_parquet_normalized(
-    spark: SparkSession,
-    path: str,
-    _raw_ns_range: tuple[str, int | None, int | None] | None = None,
-) -> DataFrame:
-    """Read parquet with deterministic timestamp semantics on ANY session.
+def _file_version(path: str) -> tuple | None:
+    """Sorted ``(relative path, size, mtime_ns)`` of every file Spark lists
+    at ``path`` (a plain file's relative path is ``""``); None when the
+    driver cannot stat it, e.g. a non-local URI."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (("", st.st_size, st.st_mtime_ns),)
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs[:] = [d for d in dirs if _listed(d)]
+            for n in filter(_listed, names):
+                f = os.path.join(root, n)
+                fst = os.stat(f)
+                files.append((os.path.relpath(f, path), fst.st_size, fst.st_mtime_ns))
+        return tuple(sorted(files))
+    except (OSError, ValueError):
+        return None
 
-    Two parquet physical encodings of a timestamp column are normalized to
-    session-tz-UTC ``TimestampType`` so every downstream operator (epoch
-    arithmetic, window ranges, date_format) behaves identically to the
-    DuckDB oracle, which treats naive parquet timestamps as UTC:
 
-    * TIMESTAMP(NANOS) — unreadable by Spark natively; read as long nanos
-      under ``nanosAsLong`` and converted with integer ``div`` (exact above
-      2^53 ns where double division would round).
-    * TIMESTAMP(MICROS, isAdjustedToUTC=false) — read as TIMESTAMP_NTZ by
-      Spark 4's ``inferTimestampNTZInRead``; cast to TimestampType under
-      the UTC session tz (value-preserving).
+def _nanos_cols(sample: str) -> frozenset[str]:
+    """TIMESTAMP(NANOS) column names from one parquet file's footer."""
+    try:
+        import pyarrow.parquet as pq
 
-    Both confs are runtime-settable SQL confs, set here rather than only in
-    the session factory so the read works on externally created sessions —
-    e.g. the correctness driver's — not just ``get_spark()``'s."""
+        return frozenset(
+            f.name for f in pq.read_schema(sample) if str(f.type) == "timestamp[ns]"
+        )
+    except Exception:
+        return frozenset()
+
+
+def _scan(
+    spark: SparkSession, path: str
+) -> tuple[DataFrame, frozenset[str], DataFrame]:
+    """(raw scan, TIMESTAMP(NANOS) columns, normalized frame) of ``path``,
+    memoized per session, path and file version. Sets the read's runtime
+    confs on every call, memo hit or not."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -207,19 +207,60 @@ def read_parquet_normalized(
     spark.conf.set(
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
     )
-    df = spark.read.parquet(path)
-    ns_cols = _nanos_cols(path)
-    from pyspark.sql import functions as F
+    version = _file_version(path)
+    key = (spark, path)
+    # no lock: a hit is checked against the version just taken, so two
+    # threads racing on one key cost a second build, never a stale frame
+    hit = _MEMO.get(key)
+    if version is not None and hit is not None and hit[0] == version:
+        return hit[1:]
+    parts = [f for f, _, _ in version or () if f.endswith(".parquet")]
+    raw = spark.read.parquet(path)
+    ns_cols = _nanos_cols(os.path.join(path, parts[0]) if parts else path)
+    scan = (raw, ns_cols, _normalize(raw, ns_cols))
+    if version is not None:
+        # a stopped session's frames are dead: drop them with this insert
+        for k in list(_MEMO):
+            if k[0]._sc._jsc is None:
+                _MEMO.pop(k, None)
+        _MEMO[key] = (version, *scan)
+    return scan
 
-    if _raw_ns_range is not None:
-        # read_parquet_ts_range's nanos path: the bounds go on the RAW
-        # long column BEFORE the conversion expression, so they reach
-        # the parquet scan's PushedFilters (row-group min/max skipping)
-        rc, lo_ns, hi_ns = _raw_ns_range
-        if lo_ns is not None:
-            df = df.filter(F.col(rc) >= F.lit(lo_ns))
-        if hi_ns is not None:
-            df = df.filter(F.col(rc) < F.lit(hi_ns))
+
+def read_parquet_normalized(spark: SparkSession, path: str) -> DataFrame:
+    """Read parquet with deterministic timestamp semantics on ANY session.
+
+    Two parquet physical encodings of a timestamp column are normalized to
+    session-tz-UTC ``TimestampType`` so every downstream operator (epoch
+    arithmetic, window ranges, date_format) behaves identically to the
+    DuckDB oracle, which treats naive parquet timestamps as UTC:
+
+    * TIMESTAMP(NANOS) — unreadable by Spark natively; read as long nanos
+      under ``nanosAsLong`` and converted with integer ``div`` (exact above
+      2^53 ns where double division would round).
+    * TIMESTAMP(MICROS, isAdjustedToUTC=false) — read as TIMESTAMP_NTZ by
+      Spark 4's ``inferTimestampNTZInRead``; cast to TimestampType under
+      the UTC session tz (value-preserving).
+
+    Both confs are runtime-settable SQL confs, set here on every call
+    rather than only in the session factory so the read works on
+    externally created sessions — e.g. the correctness driver's — not
+    just ``get_spark()``'s.
+
+    The frame is memoized per session, path and file version: the sorted
+    ``(relative path, size, mtime_ns)`` of every file Spark would list
+    there. While those are unchanged, a call returns the frame the first
+    call built, with no schema-inference job and no py4j round trips
+    beyond setting the confs; a rewritten, added or removed file makes the
+    next call read the path afresh. A path the driver cannot stat (a
+    non-local URI) is read afresh on every call."""
+    return _scan(spark, path)[2]
+
+
+def _normalize(df: DataFrame, ns_cols: frozenset[str]) -> DataFrame:
+    """``df`` with its TIMESTAMP(NANOS) longs converted and every
+    TIMESTAMP_NTZ, at any nesting depth, cast to TimestampType."""
+    from pyspark.sql import functions as F
     from pyspark.sql.types import (
         ArrayType,
         DataType,

@@ -51,6 +51,14 @@ def _footer_schema(path: str) -> StructType | None:
     return StructType.fromJson(json.loads(meta[_SPARK_ROW_SCHEMA]))
 
 
+def _read_footer_typed(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema from ``_footer_schema``
+    when it has one, so the read runs no schema-inference job."""
+    schema = _footer_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
 class Catalog:
     """Protocol: list/exists/write/rename/drop/read/count; ``publish`` is
     ``stage`` (write a staging table) then ``commit`` (rename it in)."""
@@ -341,13 +349,13 @@ class LocalCatalog(Catalog):
         ``VersionedLocalCatalog.read_version`` (a version snapshot of a
         compacted table carries its _base dir with it). The base is
         resolved through ``_effective_base`` so a crashed compaction's
-        no-``_base`` window still reads every folded row (ADVICE r10)."""
+        no-``_base`` window still reads every folded row (ADVICE r10).
+        A plain table and the base take their schema from a part file's
+        footer (``_read_footer_typed``)."""
         base = cls._effective_base(path)
         if base is None:
-            schema = _footer_schema(path)
-            reader = spark.read if schema is None else spark.read.schema(schema)
-            return reader.parquet(path)
-        bdf = spark.read.parquet(base)
+            return _read_footer_typed(spark, path)
+        bdf = _read_footer_typed(spark, base)
         # the marker comes from the SAME resolved dir the read serves —
         # re-resolving via _marker_at(path) would double the listing work
         # and could pair a filter marker with a different candidate dir

@@ -22,7 +22,8 @@ import pytest
 from cartodb_importer_spark.importer import Exporter, Importer
 from cartodb_importer_spark.readers.tiff import encode_tiff_gray
 from cartodb_importer_spark.sinks import files as fsinks
-from cartodb_importer_spark.sinks.catalog import LocalCatalog
+from cartodb_importer_spark.sinks import maintenance
+from cartodb_importer_spark.sinks.catalog import LocalCatalog, _read_footer_typed
 
 from test_excel import _make_xlsx
 
@@ -167,6 +168,22 @@ def test_catalog_read_schema_is_what_spark_infers(spark, catalog, tmp_path, name
     read = []
     assert _jobs(spark, lambda: read.append(catalog.read(spark, table))) == 0
     assert read[0].schema == spark.read.parquet(catalog._path(table)).schema
+
+
+def test_compacted_table_base_is_read_without_inference(spark, catalog):
+    df = spark.createDataFrame(
+        [(i, f"n{i}", [i * 0.5]) for i in range(8)], "id int, name string, v array<double>")
+    for b in range(4):
+        catalog.replace_batch(df.filter(f"id % 4 = {b}"), "t", b)
+    maintenance.compact_batches(spark, catalog, "t", keep_after_batch_id=3)
+    base = LocalCatalog._effective_base(catalog._path("t"))
+    assert base is not None and catalog.batch_ids("t") == [3]
+    read = []
+    # one partition-discovery job for the batch dir left after the base;
+    # the base itself takes its schema from a part file's footer
+    assert _jobs(spark, lambda: read.append(catalog.read(spark, "t"))) == 1
+    assert sorted(r.id for r in read[0].collect()) == list(range(8))
+    assert _read_footer_typed(spark, base).schema == spark.read.parquet(base).schema
 
 
 def test_csv_export_runs_one_job(spark, catalog, tmp_path):
